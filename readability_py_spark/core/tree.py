@@ -541,6 +541,21 @@ class Element(_DirectionalFinds):
 # -- helpers -----------------------------------------------------------
 
 
+def clone_tree(node, parent=None):
+    """Detached deep copy of a parsed subtree: fresh nodes carrying the
+    same names, attributes, flags and text-node types as the parse
+    that built ``node``."""
+    if isinstance(node, Element):
+        copy = Element(node.name, node.attrs, node.is_self_closing)
+        copy.hidden = node.hidden
+        copy.contains_substitutions = node.contains_substitutions
+        copy.contents = [clone_tree(c, copy) for c in node.contents]
+    else:
+        copy = type(node)(str(node))
+    copy.parent = parent
+    return copy
+
+
 def _last_recursive_child(node):
     """readability.py:1436-1441."""
     last = node

@@ -624,7 +624,14 @@ def q_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate's merge phase, minus the hash-map build/serialize/merge
     over every task. Exact per-group percentile is irreducibly
     group-local; the production monitoring path for corpus-scale
-    groups stays q_price_quartiles_approx (mergeable sketch)."""
+    groups stays q_price_quartiles_approx (mergeable sketch).
+
+    NOT NULL invariant: the isNotNull filter feeds an inner
+    aggregation, so a group whose values are ALL null emits no row,
+    where percentile() emits it with null percentiles. The two agree
+    only because l_extendedprice is NOT NULL in lineitem; reusing this
+    form on a nullable column needs a left join back to the distinct
+    groups to keep that row."""
     li = load_table(spark, sf_dir, "lineitem")
     vals = li.filter(F.col("l_extendedprice").isNotNull()).select(
         "l_returnflag", F.col("l_extendedprice").alias("v")

@@ -11,11 +11,13 @@ Scale design notes (100 TB / 1000 executors):
 - the only Python crossing is the single mapInPandas stage; everything
   else is JVM-side and Catalyst-optimized (filter + column pruning push
   into the scan).
-- repartition on pmod(hash(url), P) gives uniform work distribution
-  regardless of host skew (a Zipf-hot host spreads across all P
-  partitions because the key is the url, not the host). P defaults to
-  spark.sql.shuffle.partitions; at cluster scale submit with P ≈ 2-3×
-  total cores.
+- repartition on hash(url) into P partitions gives uniform work
+  distribution regardless of host skew (a Zipf-hot host spreads across
+  all P partitions because the key is the url, not the host). P
+  defaults to defaultParallelism, one UDF task per core: every Python
+  task pays a fixed worker setup, so tasks beyond one per core repeat
+  that cost without buying balance the url-hashed split lacks (see
+  extraction_plan).
 - the done-manifest is a url list, small relative to the corpus →
   broadcast anti-join; at 10^12 rows it becomes a bucketed sort-merge
   anti-join (AQE picks this automatically once it exceeds the
@@ -183,6 +185,17 @@ def extraction_plan(
       with spark.sql.adaptive.coalescePartitions.enabled=false to
       keep the UDF stage evenly parallel.
 
+    ``n`` (the UDF-stage width) is ``num_partitions`` when given, else
+    defaultParallelism: one Python task per core. Each Python task
+    pays a fixed worker setup of ~0.2 s CPU whatever its row count
+    (the worker's per-task importlib.invalidate_caches re-reads the
+    directory of every cached zipimporter: pyspark.zip, the
+    spark-core jar). The former 4 × defaultParallelism paid it four
+    times per core for straggler tolerance that did not show: on
+    local[4] a skew corpus (8 of 8,000 pages at 1-2 MB) ran 8.6 / 8.4
+    / 7.5 s at 16 / 8 / 4 tasks, the mixed corpus 4.6 / 3.8 / 3.3 s
+    (BENCH.md "Per-task Python setup floor").
+
     Both tie-break equal warc_ts on xxhash64(html) (deterministic at
     any partitioning; xxhash64, not md5 — ~10x cheaper JVM-side).
     Never hand-roll pmod(hash(url), n) partitioning: repartition
@@ -197,7 +210,7 @@ def extraction_plan(
         # broadcast anti-join BEFORE the exchange: already-done urls
         # never pay shuffle bytes
         p = p.join(F.broadcast(done_urls.select("url")), "url", "left_anti")
-    n = num_partitions or (4 * spark.sparkContext.defaultParallelism)
+    n = num_partitions or spark.sparkContext.defaultParallelism
     if dedup == "agg":
         p = p.groupBy("url").agg(
             F.expr("max_by(html, struct(warc_ts, xxhash64(html)))").alias(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pytest
@@ -11,6 +12,17 @@ if REPO not in sys.path:
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+# the python2 reference implementation the oracle-comparing tests run
+REFERENCE_PY = "/root/reference/readability.py"
+
+
+def python2_oracle_missing() -> str | None:
+    """Why the python2 reference oracle cannot run, or None if it can."""
+    if shutil.which("python2") is None:
+        return "python2 oracle unavailable"
+    if not os.path.exists(REFERENCE_PY):
+        return f"python2 oracle source {REFERENCE_PY} missing"
+    return None
 
 
 @pytest.fixture(scope="session")

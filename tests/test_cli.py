@@ -8,11 +8,12 @@ from __future__ import annotations
 import base64
 import json
 import os
-import shutil
 import subprocess
 import sys
 
 import pytest
+
+from .conftest import python2_oracle_missing
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDENS = os.path.join(REPO, "tests", "fixtures", "goldens.jsonl")
@@ -50,9 +51,10 @@ def _sample_fixtures(k_families: int = 4):
     return list(seen.values())
 
 
-@pytest.mark.skipif(
-    shutil.which("python2") is None, reason="python2 oracle unavailable"
-)
+ORACLE_MISSING = python2_oracle_missing()
+
+
+@pytest.mark.skipif(ORACLE_MISSING is not None, reason=str(ORACLE_MISSING))
 @pytest.mark.parametrize(
     "rec", _sample_fixtures(), ids=lambda r: r["id"]
 )

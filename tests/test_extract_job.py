@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from .conftest import SF_SMOKE
 from .test_extractor_goldens import CASES
 
 
@@ -52,6 +53,33 @@ def test_spark_extraction_matches_goldens(spark):
         assert row["title"].encode("utf-8") == base64.b64decode(
             c["title_b64"]
         ), c["id"]
+
+
+def _repartition_widths(df) -> list[int]:
+    """numPartitions of every RepartitionByExpression in the optimized
+    logical plan."""
+    widths, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "RepartitionByExpression":
+            widths.append(node.numPartitions())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return widths
+
+
+def test_extraction_plan_one_task_per_core(spark):
+    """The UDF stage defaults to one task per core (each Python task
+    pays a fixed worker setup); an explicit num_partitions still wins."""
+    from readability_py_spark.plans.extract_job import (
+        extraction_plan,
+        pages_from_documents,
+    )
+
+    pages = pages_from_documents(spark, SF_SMOKE)
+    cores = spark.sparkContext.defaultParallelism
+    assert _repartition_widths(extraction_plan(pages)) == [cores]
+    assert _repartition_widths(extraction_plan(pages, num_partitions=8)) == [8]
 
 
 @pytest.mark.parametrize("strategy", ["window", "agg"])

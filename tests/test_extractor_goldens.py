@@ -64,6 +64,24 @@ def test_byte_identity(case):
         ), "get_doc round-trip mismatch"
 
 
+@pytest.mark.skipif(not CASES, reason="goldens not generated")
+def test_hot_path_call_matches_render_extras_call():
+    """The UDF's call (no render extras) must emit exactly what the
+    render-extras call emits for every field the UDF reads, and must
+    not render the full page."""
+    from readability_py_spark.core.arc90 import extract_document
+
+    fields = ("title", "article_html", "article_text", "footnotes", "metrics")
+    for case in CASES:
+        html = base64.b64decode(case["html_b64"])
+        hot = extract_document(html, url=case["url"], **case["settings"])
+        full = extract_document(
+            html, url=case["url"], include_render_extras=True, **case["settings"]
+        )
+        assert "full_html" not in hot, case["id"]
+        assert {k: hot[k] for k in fields} == {k: full[k] for k in fields}, case["id"]
+
+
 def test_corpus_covers_all_families():
     families = {c["family"] for c in CASES}
     assert len(families) >= 15, families

@@ -10,6 +10,8 @@ import subprocess
 
 import pytest
 
+from .conftest import python2_oracle_missing
+
 HTML = (
     "<html><head><title>T</title></head><body>"
     "<div id='a'><p class='x'>one <b>bold</b> two</p><p>three</p></div>"
@@ -55,6 +57,9 @@ print(json.dumps(out))
 
 @pytest.fixture(scope="module")
 def oracle():
+    reason = python2_oracle_missing()
+    if reason:
+        pytest.skip(reason)
     env = dict(os.environ)
     env["PYENV_VERSION"] = "2.7.18"
     proc = subprocess.run(

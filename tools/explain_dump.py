@@ -8,9 +8,9 @@ e.g.
 
 Writes <outdir>/<query>_<suffix>.txt. Uses the same session shape as
 bench.py (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus). Plans
-are captured WITHOUT executing the query (explain is plan-only), so
-eager persists inside query builders do run their materialization jobs
-— callers should expect a few seconds per cached query.
+are captured WITHOUT executing the query (explain is plan-only), but
+eager persists inside query builders still run their materialization
+jobs — callers should expect a few seconds per cached query.
 """
 
 from __future__ import annotations
