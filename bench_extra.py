@@ -29,7 +29,8 @@ def probes(spark, sf_dir):
     from readability_py_spark.operators.textstats import (
         DECON_N,
         DECON_SLICE,
-        _gram_array,
+        gram_array,
+        words_of,
     )
     from readability_py_spark.session import load_table, maybe_parallelize
 
@@ -39,7 +40,7 @@ def probes(spark, sf_dir):
     def decon_gram_build():
         corpus = maybe_parallelize(docs(), spark).select(
             "doc_id",
-            F.array_distinct(_gram_array(F.col("text"), DECON_N)).alias("g"),
+            F.array_distinct(gram_array(words_of(F.col("text")), DECON_N)).alias("g"),
         )
         return corpus.select("doc_id", F.size("g").alias("n"))
 
@@ -47,7 +48,7 @@ def probes(spark, sf_dir):
         ev = (
             docs()
             .filter(F.col("doc_id") % DECON_SLICE == 0)
-            .select(F.explode(_gram_array(F.col("text"), DECON_N)).alias("g"))
+            .select(F.explode(gram_array(words_of(F.col("text")), DECON_N)).alias("g"))
             .distinct()
         )
         return ev.agg(F.array_sort(F.collect_set("g")).alias("evg"))

@@ -27,32 +27,14 @@ DRIVER_QUERY_BUDGET = 50
 # the driver dict for budget). Retirement policy: a retiree must be
 # either a strict sub-plan of a surviving entry (its correctness is
 # driver-certified transitively) or a sibling whose distinguishing
-# semantics a surviving family member also exercises.
+# semantics a surviving family member also exercises. A retiree must
+# also stay in bench.py's HEADLINE (pinned by
+# tests/test_operators_r5.py): a query that neither the driver, the
+# bench nor a surviving query runs is deleted, not retired.
 #   media_decode_stub   ⊂ media_decode_headers (same UDF, weaker corpus)
-#   minhash_signatures  ⊂ minhash_lsh_dups     (its signature stage)
-#   simhash_docs        ⊂ simhash_dup_pairs    (its signature stage)
-#   ann_lsh_buckets     ⊂ ann_lsh_topk         (its bucketing stage)
-#   set_union           — set-ops family still driver-covered by
-#                         set_except
-#   set_intersect       — retired r5 for the groups/decontaminate
-#                         slots; set-ops family driver-covered by
-#                         set_except (union+intersect locally green)
-#   media_meta          — retired r5: same synthesized media corpus
-#                         family as media_decode_headers, which is the
-#                         superset decode (headers + dims vs type tag)
-#   ngram_jaccard_dups  — retired r5: its banded-Jaccard semantics are
-#                         exactly minhash_lsh_dups' verify stage
-#                         (identical jaccard expression over the same
-#                         shingle relation), which stays driver-green
-#   simhash_dup_pairs   — retired r5 for the tfidf_cosine_pairs slot:
-#                         its uncapped hi16-band join + hamming verify
-#                         is exactly the surviving
-#                         simhash_pairs_capped's non-hot-bucket channel
-#                         (same signature build, band key, and hamming
-#                         expression; the capped query adds only the
-#                         hot-bucket guard on top)
+#   simhash_docs        ⊂ simhash_pairs_capped (its signature stage)
 #
-# Round-6 rotation (VERDICT r5 "Next round" #1): ten stable entries
+# Round-6 rotation (VERDICT r5 "Next round" #1): stable entries
 # retire so the never-driver-certified LOCAL_ONLY surface gets the
 # hard CORRECTNESS signal. Per-entry policy:
 #   minhash_lsh_capped  — strict sub-plan of surviving dedup_groups
@@ -68,8 +50,7 @@ DRIVER_QUERY_BUDGET = 50
 #                         path over the gated survivors
 #   minhash_signatures_fast — rows-only row (no DuckDB xxhash64), so
 #                         its driver slot carried no hash signal;
-#                         sibling of retired minhash_signatures and a
-#                         strict sub-plan of minhash_lsh_capped_fast,
+#                         a strict sub-plan of minhash_lsh_capped_fast,
 #                         whose pair-set equality vs the md5 family is
 #                         pytest-pinned
 #   events_daily        — strict semantic subset of incoming
@@ -90,20 +71,9 @@ DRIVER_QUERY_BUDGET = 50
 #                         embedding_near_dups (both LSH-bucket
 #                         equi-joins) + knn_brute_topk (the recall
 #                         baseline); 3 green rounds
-#   explode_words       — UDTF face covered by surviving vocab_topk
-#                         (same split+explode over documents feeding
-#                         an agg) and extract_footnotes (the UDTF
-#                         flagship); 5 green rounds
 RETIRED = {
     "media_decode_stub",
-    "minhash_signatures",
     "simhash_docs",
-    "ann_lsh_buckets",
-    "set_union",
-    "set_intersect",
-    "media_meta",
-    "ngram_jaccard_dups",
-    "simhash_dup_pairs",
     "minhash_lsh_capped",
     "simhash_pairs_capped",
     "minhash_lsh_dups",
@@ -113,7 +83,6 @@ RETIRED = {
     "events_pivot",
     "gopher_lines",
     "ann_lsh_topk",
-    "explode_words",
 }
 
 # Beyond-budget operators: full queries()+oracle implementations that

@@ -1,9 +1,8 @@
 """Deduplication operators for the training-data pipeline.
 
-Four families, each a `queries()` entry with a DuckDB oracle twin:
+Three families, each a `queries()` entry with a DuckDB oracle twin:
 
 - exact:        md5 fingerprint groupBy (one shuffle on the hash key)
-- n-gram Jaccard: length-banded blocking → pair join → set Jaccard
 - MinHash+LSH:  shingle → k md5-minhashes → band signatures → bucket
                 join → Jaccard verify (the scale path: candidate pairs
                 come from equi-join on band signature, never O(n²))
@@ -18,9 +17,7 @@ strings (lexicographic min == numeric min on fixed-width hex).
 Scale notes (100 TB): exact dedup shuffles once on the fingerprint;
 MinHash shuffles shingles (explode factor ~#shingles × k, bounded by
 distinct-shingle cap) then joins on band signature, which is uniform by
-construction; Jaccard verify touches only candidate pairs. The plain
-banded-Jaccard query is the small-scale oracle twin — at corpus scale
-only the LSH path runs.
+construction; Jaccard verify touches only candidate pairs.
 """
 
 from __future__ import annotations
@@ -152,80 +149,18 @@ FROM documents GROUP BY 1
 """
 
 
-def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs by bigram-shingle Jaccard, blocked on
-    (lang, n_chars//100) so the pair join is banded, not O(n²)."""
-    d = _shingled(spark, sf_dir).withColumn(
-        "band", (F.col("n_chars") / 100).cast("long")
-    )
-    d = _persist(d, eager=True)  # reused by both sides of the pair join
-    a = d.alias("a")
-    b = d.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    jacc = inter.cast("double") / union
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-            F.round(jacc, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-
-
-ORACLE_NGRAM_JACCARD_DUPS = f"""
-WITH d AS ({_SH_DUCK}),
-banded AS (SELECT doc_id, lang, n_chars // 100 AS band, sh FROM d),
-pairs AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-               / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
-  FROM banded a JOIN banded b
-    ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-)
-SELECT a_id, b_id, jaccard FROM pairs WHERE jaccard >= {JACCARD_THRESHOLD}
-"""
-
-
-def _minhash_col(i: int) -> F.Column:
-    """h_i = min over shingles of md5(i || ':' || s) — computed map-only
-    inside the row via array expressions (no explode, no shuffle; the
-    whole signature build is embarrassingly parallel at 100 TB)."""
-    return F.array_min(
-        F.transform(
-            F.col("sh"),
-            lambda s: F.md5(F.encode(F.concat(F.lit(f"{i}:"), s), "utf-8")),
-        )
-    )
-
-
-def _minhash_fast_col(i: int) -> F.Column:
-    """Production-hash permutation h_i = min over shingles of
-    xxhash64(i, s) — a JVM hash an order of magnitude cheaper than the
-    md5-hex family (no hex string materialization, no utf-8 encode of
-    a prefixed copy). Same map-only array_min∘transform shape."""
-    return F.array_min(
-        F.transform(F.col("sh"), lambda s: F.xxhash64(F.lit(i), s))
-    )
-
-
 def _band_signatures(
     d: DataFrame,
     k: int = MINHASH_K,
     band_size: int = MINHASH_BAND_SIZE,
-    hash_col=_minhash_col,
+    family: str = "md5",
 ) -> DataFrame:
     """(doc_id, band, band_sig) for k minhashes in bands of band_size —
     map-only signature build (no explode of shingles, no shuffle).
-    ``hash_col`` picks the permutation family: md5 (oracle-parity
-    default) or xxhash64 (production).
+    ``family`` picks the permutation h_i(s) whose min over the shingles
+    is minhash i: ``"md5"`` is md5(i || ':' || s) as hex, the
+    oracle-parity default; ``"xxhash64"`` is xxhash64(i, s), the
+    production family.
 
     r7: the k mins come from ONE aggregate pass over the shingle array
     (acc = k-vector of running mins, null-initialized; ``least`` skips
@@ -239,7 +174,9 @@ def _band_signatures(
     empty/1-token doc folds to an all-null vector → concat_ws skips
     nulls → band_sig '' → dropped by the existing filter, matching
     array_min's null on empty input."""
-    fast = hash_col is _minhash_fast_col
+    if family not in ("md5", "xxhash64"):
+        raise ValueError(f"unknown MinHash family {family!r}")
+    fast = family == "xxhash64"
 
     def hashes_of(s: Column) -> Column:
         if fast:
@@ -295,12 +232,6 @@ def _band_signatures(
     )
 
 
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc MinHash band signatures (the LSH index one would persist
-    alongside the corpus): 4 bands × 3 md5-minhashes, map-only."""
-    return _band_signatures(_shingled(spark, sf_dir))
-
-
 def _duck_minhash_sig(
     k: int = MINHASH_K, band_size: int = MINHASH_BAND_SIZE, src: str = "d"
 ) -> str:
@@ -313,14 +244,6 @@ def _duck_minhash_sig(
         )
         band_exprs.append(f"SELECT doc_id, {b} AS band, {mins} AS band_sig FROM {src} WHERE len(sh) > 0")
     return "\nUNION ALL\n".join(band_exprs)
-
-
-ORACLE_MINHASH_SIGNATURES = f"""
-WITH d AS ({_SH_DUCK})
-SELECT doc_id, CAST(band AS INT) AS band, band_sig FROM (
-{_duck_minhash_sig()}
-)
-"""
 
 
 def q_minhash_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,9 +261,7 @@ def q_minhash_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_operators_r4.py): identical shingle sets ⇒ identical
     signatures, and the full LSH dedup pipeline over either family
     verifies to the same near-dup pair set at test SF."""
-    return _band_signatures(
-        _shingled(spark, sf_dir), hash_col=_minhash_fast_col
-    )
+    return _band_signatures(_shingled(spark, sf_dir), family="xxhash64")
 
 
 def minhash_lsh_dups_from(sig: DataFrame, sh: DataFrame) -> DataFrame:
@@ -378,7 +299,7 @@ def minhash_lsh_dups_from(sig: DataFrame, sh: DataFrame) -> DataFrame:
 def q_minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash-LSH dedup: candidates = equi-join on band signature
     (uniform shuffle key — no quadratic blowup), then exact-Jaccard
-    verify at the same threshold as the banded-Jaccard query.
+    verify at JACCARD_THRESHOLD.
 
     The signature and shingle-set relations are cached: both sides of
     the candidate self-join and the verify join reuse them (at corpus
@@ -496,7 +417,7 @@ def q_minhash_lsh_capped_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         k=MINHASH_K_PROD,
         band_size=MINHASH_BAND_SIZE_PROD,
-        hash_col=_minhash_fast_col,
+        family="xxhash64",
     )
     return _capped_tail(spark, sf_dir, d, sig, F.xxhash64(F.col("text")))
 
@@ -709,39 +630,11 @@ def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SIMHASH_DOCS = _simhash_sql("duckdb")
 
 
-def _simhash_pairs_sql(dialect: str, hint: str = "") -> str:
-    """SimHash near-dup pairs: band on the high 16 bits (equi-join — the
-    scale-safe candidate generator), keep hamming distance ≤ 6/32."""
-    base = _simhash_sql(dialect, hint=hint).strip()
-    if dialect == "spark":
-        shr16 = "shiftright(simhash, 16)"
-        ham = "bit_count(a.simhash ^ b.simhash)"
-    else:
-        shr16 = "(simhash >> 16)"
-        ham = "bit_count(xor(a.simhash, b.simhash))"
-    return f"""
-WITH sig AS ({base}),
-banded AS (SELECT doc_id, simhash, {shr16} AS hi16 FROM sig)
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       CAST({ham} AS INT) AS hamming
-FROM banded a JOIN banded b ON a.hi16 = b.hi16 AND a.doc_id < b.doc_id
-WHERE {ham} <= 6
-"""
-
-
-def q_simhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hint = _docs_view_and_hint(spark, sf_dir)
-    return spark.sql(_simhash_pairs_sql("spark", hint=hint))
-
-
-ORACLE_SIMHASH_DUP_PAIRS = _simhash_pairs_sql("duckdb")
-
-
 def _simhash_pairs_capped_sql(dialect: str) -> str:
     """SimHash near-dup pairs with a hot-bucket cap — the 100 TB path
     (round-3; mirrors q_minhash_lsh_capped's guard, VERDICT r2 item 1).
 
-    The plain pair query's hi16 band join is an equi-join, but a
+    Banding on the high 16 bits makes the pair join an equi-join, but a
     boilerplate-heavy corpus concentrates near-identical signatures
     into one hi16 bucket and the pair join inside it goes quadratic.
     Here a hi16 bucket holding more than LSH_BUCKET_CAP docs is
@@ -904,7 +797,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CLAUDE.md: IEEE -0.0 + typed-hash rules); the corpus' cosine
     distribution is bimodal (near-dup replicas ≥ ~0.8, unrelated docs
     ≤ ~0.2), so the 0.6 threshold is robust to summation order."""
-    from .textstats import _gram_array
+    from .textstats import gram_array, words_of
 
     docs = maybe_parallelize(
         load_table(spark, sf_dir, "documents"), spark
@@ -915,7 +808,8 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (advisor r5 — lazily it recomputed once per subtree)
     tf = _persist(
         docs.select(
-            "doc_id", F.explode(_gram_array(F.col("text"), TFIDF_N)).alias("term")
+            "doc_id",
+            F.explode(gram_array(words_of(F.col("text")), TFIDF_N)).alias("term"),
         )
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("double").alias("tf")),
@@ -1007,8 +901,6 @@ ORACLE_TFIDF_COSINE_PAIRS = _oracle_tfidf()
 
 QUERIES = {
     "dedup_exact": q_dedup_exact,
-    "ngram_jaccard_dups": q_ngram_jaccard_dups,
-    "minhash_signatures": q_minhash_signatures,
     # rows-only driver entry (no DuckDB xxhash64): the production hash
     # path; equivalence vs the md5 family is pytest-pinned
     "minhash_signatures_fast": q_minhash_signatures_fast,
@@ -1018,7 +910,6 @@ QUERIES = {
     # pipeline; pair-set equality vs the md5 path is pytest-pinned
     "minhash_lsh_capped_fast": q_minhash_lsh_capped_fast,
     "simhash_docs": q_simhash_docs,
-    "simhash_dup_pairs": q_simhash_dup_pairs,
     "simhash_pairs_capped": q_simhash_pairs_capped,
     "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
 }
@@ -1026,11 +917,8 @@ QUERIES = {
 ORACLES = {
     "minhash_lsh_capped": ORACLE_MINHASH_LSH_CAPPED,
     "dedup_exact": ORACLE_DEDUP_EXACT,
-    "ngram_jaccard_dups": ORACLE_NGRAM_JACCARD_DUPS,
-    "minhash_signatures": ORACLE_MINHASH_SIGNATURES,
     "minhash_lsh_dups": ORACLE_MINHASH_LSH_DUPS,
     "simhash_docs": ORACLE_SIMHASH_DOCS,
-    "simhash_dup_pairs": ORACLE_SIMHASH_DUP_PAIRS,
     "simhash_pairs_capped": ORACLE_SIMHASH_PAIRS_CAPPED,
     "tfidf_cosine_pairs": ORACLE_TFIDF_COSINE_PAIRS,
 }

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_table, maybe_parallelize
+from .textstats import words_of
 
 # The exploded bigram relation is persisted through dedup's shared
 # registry so bench/driver-rehearsal's existing release hook
@@ -62,7 +63,7 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
     toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
+        "doc_id", words_of(F.col("text")).alias("t")
     )
     big = _persist(
         toks.select(
@@ -170,7 +171,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ws"),
+        words_of(F.col("text")).alias("ws"),
     )
     bucket = f"CAST(conv(substr(md5(x), 1, 4), 16, 10) AS INT) % {b_mod}"
     bigrams = (
@@ -272,7 +273,7 @@ def q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort). Deterministic tie-break: count desc, pair asc."""
     docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
     toks = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
+        F.explode(words_of(F.col("text"))).alias("w")
     ).filter(F.length("w") >= 1)
     words = (
         toks.select(F.concat(F.col("w"), F.lit(BPE_EOW)).alias("w"))

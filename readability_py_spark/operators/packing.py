@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import load_table, maybe_parallelize
+from .textstats import words_of
 
 PACK_WINDOW = 2048  # tokens per packed context window
 PACK_BUCKETS = 32  # independent packing streams (shuffle width)
@@ -343,7 +344,7 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         docs.select(
             "source",
-            F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
+            F.size(words_of(F.col("text")))
             .cast("bigint")
             .alias("nt"),
         )

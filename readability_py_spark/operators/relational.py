@@ -294,36 +294,6 @@ SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events WHERE event_type = 
 """
 
 
-def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    signups = ev.filter(F.col("event_type") == "signup").select("user_id").distinct()
-    return buyers.intersect(signups)
-
-
-ORACLE_SET_INTERSECT = """
-SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-INTERSECT
-SELECT DISTINCT user_id FROM events WHERE event_type = 'signup'
-"""
-
-
-def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id")
-    signups = ev.filter(F.col("event_type") == "signup").select("user_id")
-    return buyers.union(signups).distinct()
-
-
-ORACLE_SET_UNION = """
-SELECT DISTINCT user_id FROM (
-  SELECT user_id FROM events WHERE event_type = 'purchase'
-  UNION ALL
-  SELECT user_id FROM events WHERE event_type = 'signup'
-)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Rollup / grouping sets
 # ---------------------------------------------------------------------------
@@ -501,31 +471,6 @@ FROM scored GROUP BY source
 
 
 # ---------------------------------------------------------------------------
-# Multimodal column plumbing (binary payload + typed metadata)
-# ---------------------------------------------------------------------------
-
-def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opaque-binary handling: payload byte length + magic-bytes sniff.
-    documents.text stands in for the media blob (no image bytes in the
-    driver testdata); the real decode path is the mapInPandas stub in
-    operators/multimodal.py."""
-    docs = load_table(spark, sf_dir, "documents")
-    blob = F.encode(F.col("text"), "utf-8")
-    return docs.select(
-        "doc_id",
-        F.octet_length(blob).alias("n_bytes"),
-        F.lower(F.substring(F.hex(blob), 1, 8)).alias("magic4"),
-    )
-
-
-ORACLE_MEDIA_META = """
-SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-       lower(substr(hex(encode(text)), 1, 8)) AS magic4
-FROM documents
-"""
-
-
-# ---------------------------------------------------------------------------
 # Cube / percentiles / sessionization / pivot / global top-k
 # ---------------------------------------------------------------------------
 
@@ -550,28 +495,6 @@ SELECT regexp_extract(concat('http://', source, '.example.com/doc-',
                       '^[a-z]+://([^/]+)/', 1) AS host,
        COUNT(*) AS pages
 FROM documents GROUP BY 1
-"""
-
-
-def q_explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UDTF-shaped operator: one row per (doc, position, token) —
-    the lateral-explode face used for shingle/footnote tables."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.filter(F.col("doc_id") < 50)
-        .select(
-            "doc_id",
-            F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word"),
-        )
-    )
-
-
-ORACLE_EXPLODE_WORDS = """
-SELECT doc_id, CAST(i - 1 AS INT) AS pos, string_split(text, ' ')[i] AS word
-FROM (SELECT doc_id, text,
-             unnest(range(1, len(string_split(text, ' ')) + 1)) AS i
-      FROM documents)
-WHERE doc_id < 50
 """
 
 
@@ -816,7 +739,6 @@ ORDER BY revenue DESC, p_partkey ASC LIMIT 10
 QUERIES = {
     "corpus_filter": q_corpus_filter,
     "host_projection": q_host_projection,
-    "explode_words": q_explode_words,
     "cube_orders": q_cube_orders,
     "price_quartiles": q_price_quartiles,
     "price_quartiles_approx": q_price_quartiles_approx,
@@ -831,8 +753,6 @@ QUERIES = {
     "resume_anti_join": q_resume_anti_join,
     "custs_with_big_orders": q_custs_with_big_orders,
     "set_except": q_set_except,
-    "set_intersect": q_set_intersect,
-    "set_union": q_set_union,
     "rollup_source_lang": q_rollup_source_lang,
     "orders_by_month": q_orders_by_month,
     "events_daily": q_events_daily,
@@ -840,13 +760,11 @@ QUERIES = {
     "salted_lang_agg": q_salted_lang_agg,
     "string_stats": q_string_stats,
     "candidate_scores": q_candidate_scores,
-    "media_meta": q_media_meta,
 }
 
 ORACLES = {
     "corpus_filter": ORACLE_CORPUS_FILTER,
     "host_projection": ORACLE_HOST_PROJECTION,
-    "explode_words": ORACLE_EXPLODE_WORDS,
     "cube_orders": ORACLE_CUBE_ORDERS,
     "price_quartiles": ORACLE_PRICE_QUARTILES,
     "sessionize_events": ORACLE_SESSIONIZE_EVENTS,
@@ -860,8 +778,6 @@ ORACLES = {
     "resume_anti_join": ORACLE_RESUME_ANTI_JOIN,
     "custs_with_big_orders": ORACLE_CUSTS_WITH_BIG_ORDERS,
     "set_except": ORACLE_SET_EXCEPT,
-    "set_intersect": ORACLE_SET_INTERSECT,
-    "set_union": ORACLE_SET_UNION,
     "rollup_source_lang": ORACLE_ROLLUP_SOURCE_LANG,
     "orders_by_month": ORACLE_ORDERS_BY_MONTH,
     "events_daily": ORACLE_EVENTS_DAILY,
@@ -869,5 +785,4 @@ ORACLES = {
     "salted_lang_agg": ORACLE_SALTED_LANG_AGG,
     "string_stats": ORACLE_STRING_STATS,
     "candidate_scores": ORACLE_CANDIDATE_SCORES,
-    "media_meta": ORACLE_MEDIA_META,
 }

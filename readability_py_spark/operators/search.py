@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_table, maybe_parallelize
+from .textstats import words_of
 
 QUERY_TERMS = ("spark", "join", "window")
 BM25_K1 = 1.2
@@ -78,7 +79,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
     t = docs.select(
         "doc_id",
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ws"),
+        words_of(F.col("text")).alias("ws"),
     )
     f = _persist(
         t.select(

@@ -155,18 +155,6 @@ def _duck_bucket(planes: list[list[float]] | None = None) -> str:
     return "CAST(" + " + ".join(terms) + " AS INT)"
 
 
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-random-projection bucket assignment (the persisted ANN index)."""
-    n = _normed(spark, sf_dir)
-    return n.select("vec_id", "label", _bucket_col().alias("bucket"))
-
-
-ORACLE_ANN_LSH_BUCKETS = f"""
-WITH n AS ({_DUCK_NORMED})
-SELECT vec_id, label, {_duck_bucket()} AS bucket FROM n
-"""
-
-
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k: candidates restricted to the query's LSH bucket —
     equi-join on bucket, then per-query window. The 100 TB plan: index
@@ -632,7 +620,6 @@ FROM first_keeper WHERE rr = 1
 
 QUERIES = {
     "knn_brute_topk": q_knn_brute_topk,
-    "ann_lsh_buckets": q_ann_lsh_buckets,
     "ann_lsh_topk": q_ann_lsh_topk,
     "ann_ivf_topk": q_ann_ivf_topk,
     "embedding_near_dups": q_embedding_near_dups,
@@ -642,7 +629,6 @@ QUERIES = {
 
 ORACLES = {
     "knn_brute_topk": ORACLE_KNN_BRUTE_TOPK,
-    "ann_lsh_buckets": ORACLE_ANN_LSH_BUCKETS,
     "ann_lsh_topk": ORACLE_ANN_LSH_TOPK,
     "ann_ivf_topk": ORACLE_ANN_IVF_TOPK,
     "embedding_near_dups": ORACLE_EMBEDDING_NEAR_DUPS,

@@ -362,6 +362,14 @@ REP_TOP2_MAX = 0.20
 REP_DUP5_MAX = 0.15
 
 
+def words_of(text_col) -> F.Column:
+    """The word array of a text column: lowercased, trimmed, split on
+    whitespace runs — the one word normalization of every gram, LM,
+    search and token-count operator (DuckDB twins:
+    ``regexp_split_to_array(trim(lower(text)), '\\s+')``)."""
+    return F.split(F.trim(F.lower(text_col)), r"\s+")
+
+
 def gram_array(words: F.Column, n: int) -> F.Column:
     """In-row word n-gram array (empty when the doc has < n words).
 
@@ -437,7 +445,7 @@ def repetition_cols(text: F.Column) -> tuple[F.Column, F.Column]:
     """(top2gram_frac, dup5gram_frac) as pure map-only expressions over
     a text column — shared by q_repetition_stats and the composed
     pipeline gate."""
-    words = F.split(F.trim(F.lower(text)), r"\s+")
+    words = words_of(text)
     chars = F.length(text)
     # greatest(chars, 1): an empty doc has no grams (fold → 0) and must
     # score 0.0, not divide by zero
@@ -945,21 +953,6 @@ DECON_N = 13  # the published eval-contamination n-gram length
 DECON_SLICE = 97  # synthetic eval set = documents with doc_id % 97 == 0
 
 
-def _gram_array(text_col, n: int) -> F.Column:
-    """All n-word grams of a text column (same trim/lower/\\s+ word
-    normalization as the repetition family / _duck_grams); empty array
-    below n words. Gram construction is array_join∘slice — see
-    gram_array's docstring for the byte-identity + cost argument."""
-    w = F.split(F.trim(F.lower(text_col)), r"\s+")
-    return F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document eval-set contamination flag + distinct-13-gram
     overlap count against a deterministic synthetic eval set (the
@@ -1003,11 +996,11 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZATION_r07.md; the plan swap is pinned in
     tests/test_operators_r5.py."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = F.array_distinct(_gram_array(F.col("text"), DECON_N))
+    grams = F.array_distinct(gram_array(words_of(F.col("text")), DECON_N))
     ev = (
         maybe_parallelize(docs, spark)
         .filter(F.col("doc_id") % DECON_SLICE == 0)
-        .select(F.explode(_gram_array(F.col("text"), DECON_N)).alias("evg"))
+        .select(F.explode(gram_array(words_of(F.col("text")), DECON_N)).alias("evg"))
         .distinct()
     )
     corpus = maybe_parallelize(docs, spark).select(
@@ -1101,7 +1094,7 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_g = (
         maybe_parallelize(docs, spark)
         .filter(F.col("doc_id") % DECON_SLICE == 0)
-        .select(F.explode(_gram_array(F.col("text"), DECON_N)).alias("g"))
+        .select(F.explode(gram_array(words_of(F.col("text")), DECON_N)).alias("g"))
         .distinct()
     )
     # call_function: the F.shiftleft wrapper only takes a python-int
@@ -1154,7 +1147,7 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = maybe_parallelize(docs, spark).select(
         "doc_id",
-        F.array_distinct(_gram_array(F.col("text"), DECON_N)).alias("grams"),
+        F.array_distinct(gram_array(words_of(F.col("text")), DECON_N)).alias("grams"),
         F.lit(1).alias("k"),
     )
     hits = F.size(F.filter(F.col("grams"), gram_hits))
@@ -1210,7 +1203,7 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "source",
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ws"),
+            words_of(F.col("text")).alias("ws"),
         ).select("doc_id", "source", F.explode(lines_arr).alias("line")),
         eager=True,  # two consumers below — the multi-reference rule
     )
@@ -1365,7 +1358,7 @@ def q_vocab_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group instead of the pair stream)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "lang", F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
+        "lang", F.explode(words_of(F.col("text"))).alias("tok")
     ).filter(F.col("tok") != "")
     return toks.groupBy("lang").agg(
         F.countDistinct("tok").alias("n_vocab"),
@@ -1396,7 +1389,7 @@ def q_vocab_cardinality_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     group instead of the distinct pair stream."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "lang", F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
+        "lang", F.explode(words_of(F.col("text"))).alias("tok")
     ).filter(F.col("tok") != "")
     return toks.groupBy("lang").agg(
         F.approx_count_distinct("tok", rsd=0.02).alias("n_vocab_approx"),

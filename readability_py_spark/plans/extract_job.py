@@ -3,7 +3,7 @@
 Logical plan:
   scan(pages) → filter(lang/nonempty) → left-anti join(done-manifest,
   broadcast) → dedup-latest(url, warc_ts) over a SINGLE hash(url)
-  exchange (window or max_by-agg strategy, see extraction_plan) →
+  exchange (partition-local window, see extraction_plan) →
   mapInPandas(extract_batch, Arrow) → sink(parquet) + done-manifest
   append + per-partition metrics.
 
@@ -32,7 +32,7 @@ import os
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -146,7 +146,6 @@ def extraction_plan(
     done_urls: DataFrame | None = None,
     num_partitions: int | None = None,
     settings: dict | None = None,
-    dedup: str = "window",
     assume_clustered: bool = False,
 ) -> DataFrame:
     """Build the full logical plan over a pages DataFrame
@@ -161,29 +160,14 @@ def extraction_plan(
     At 10^12 rows this converts the one full-payload shuffle into a
     one-time ingest cost amortized over every downstream extraction.
 
-    ``dedup`` picks the dedup-latest strategy — both are a SINGLE
-    full-payload exchange (zero when assume_clustered); they differ in
-    where duplicate payloads die:
-
-    - ``"window"`` (default): repartition(n, url) [REPARTITION_BY_NUM —
-      exempt from AQE coalescing, so the CPU-bound UDF stage keeps n
-      perfectly even tasks] → partition-local row_number window (the
-      hash partitioning satisfies the window's distribution → no
-      second exchange). Duplicates cross the wire. Best when dup rate
-      is low — measured fastest at both 8 and 32 cores on the bench
-      corpus (0% dups): the agg variant cost +23%@8 / +80%@32 there,
-      the latter mostly from AQE coalescing the agg exchange unevenly
-      (808-1709 docs/task → straggler tail in the Python stage).
-    - ``"agg"``: groupBy(url).agg(max_by(html, struct(warc_ts, h))) —
-      partial_max_by runs MAP-SIDE, so at Common-Crawl dup rates
-      (30-60%) most duplicate payloads never pay shuffle bytes. The
-      exchange width follows spark.sql.shuffle.partitions — set it at
-      job submission (``num_partitions`` is NOT applied here: a
-      repartition before the groupBy would defeat the map-side
-      combine, and mutating the session conf from inside a plan
-      builder leaks into unrelated queries — advisor r2). Pair it
-      with spark.sql.adaptive.coalescePartitions.enabled=false to
-      keep the UDF stage evenly parallel.
+    Dedup-latest is a SINGLE full-payload exchange (zero when
+    assume_clustered): repartition(n, url) [REPARTITION_BY_NUM —
+    exempt from AQE coalescing, so the CPU-bound UDF stage keeps n
+    perfectly even tasks] → partition-local row_number window (the
+    hash partitioning satisfies the window's distribution → no second
+    exchange). Duplicates cross the wire; on the bench corpus (0%
+    dups) a map-side max_by aggregate cost +23% at 8 cores and +80% at
+    32, mostly from AQE coalescing its exchange unevenly.
 
     ``n`` (the UDF-stage width) is ``num_partitions`` when given, else
     defaultParallelism: one Python task per core. Each Python task
@@ -196,8 +180,8 @@ def extraction_plan(
     / 7.5 s at 16 / 8 / 4 tasks, the mixed corpus 4.6 / 3.8 / 3.3 s
     (BENCH.md "Per-task Python setup floor").
 
-    Both tie-break equal warc_ts on xxhash64(html) (deterministic at
-    any partitioning; xxhash64, not md5 — ~10x cheaper JVM-side).
+    Equal warc_ts tie-break on xxhash64(html) (deterministic at any
+    partitioning; xxhash64, not md5 — ~10x cheaper JVM-side).
     Never hand-roll pmod(hash(url), n) partitioning: repartition
     hashes the expression AGAIN and the 0..n-1 bucket ids collide —
     observed 18 skewed tasks instead of 32."""
@@ -210,31 +194,22 @@ def extraction_plan(
         # broadcast anti-join BEFORE the exchange: already-done urls
         # never pay shuffle bytes
         p = p.join(F.broadcast(done_urls.select("url")), "url", "left_anti")
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    if dedup == "agg":
-        p = p.groupBy("url").agg(
-            F.expr("max_by(html, struct(warc_ts, xxhash64(html)))").alias(
-                "html"
-            )
+    if not assume_clustered:
+        n = num_partitions or spark.sparkContext.defaultParallelism
+        p = p.repartition(n, F.col("url"))
+    p = (
+        p.withColumn(
+            "_rn",
+            F.row_number().over(
+                Window.partitionBy("url").orderBy(
+                    F.desc("warc_ts"), F.desc(F.xxhash64(F.col("html")))
+                )
+            ),
         )
-    else:
-        from pyspark.sql import Window
-
-        if not assume_clustered:
-            p = p.repartition(n, F.col("url"))
-        p = (
-            p.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("url").orderBy(
-                        F.desc("warc_ts"), F.desc(F.xxhash64(F.col("html")))
-                    )
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-            # column pruning: the UDF only ever sees (url, html)
-            .select("url", "html")
-        )
+        .filter(F.col("_rn") == 1)
+        # column pruning: the UDF only ever sees (url, html)
+        .select("url", "html")
+    )
     fn = make_extract_batch(settings) if settings else extract_batch
     return p.mapInPandas(fn, EXTRACT_SCHEMA)
 

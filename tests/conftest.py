@@ -25,6 +25,28 @@ def python2_oracle_missing() -> str | None:
     return None
 
 
+def executed_plan(df) -> str:
+    """The executed-plan tree string of ``df`` with every
+    ``== Initial Plan ==`` section removed: that header line and every
+    line indented deeper beneath it. Adaptive plans print their
+    initial plan after the final or current one, at the top level once
+    the query ran and inside every eagerly built cache; without the
+    cut, assertions over the plan also read the plans that did not
+    run."""
+    out: list[str] = []
+    cut_below = None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        indent = len(line) - len(line.lstrip(" "))
+        if cut_below is not None and indent > cut_below:
+            continue
+        cut_below = None
+        if line.lstrip(" ").startswith("+- == Initial Plan =="):
+            cut_below = indent
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from readability_py_spark.session import build_session

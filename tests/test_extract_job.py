@@ -6,8 +6,6 @@ import base64
 import json
 import os
 
-import pytest
-
 from .conftest import SF_SMOKE
 from .test_extractor_goldens import CASES
 
@@ -82,11 +80,10 @@ def test_extraction_plan_one_task_per_core(spark):
     assert _repartition_widths(extraction_plan(pages, num_partitions=8)) == [8]
 
 
-@pytest.mark.parametrize("strategy", ["window", "agg"])
-def test_dedup_latest_picks_newest_html(spark, strategy):
+def test_dedup_latest_picks_newest_html(spark):
     """Two crawls of the same url: extraction must use the LATER
     warc_ts's html (and the choice is deterministic under ties via the
-    xxhash64 tie-break) — under BOTH dedup strategies."""
+    xxhash64 tie-break)."""
     from pyspark.sql import functions as F
 
     from readability_py_spark.plans.extract_job import extraction_plan
@@ -101,7 +98,7 @@ def test_dedup_latest_picks_newest_html(spark, strategy):
     pages = spark.createDataFrame(
         rows, "url string, warc_ts string, html binary, text string, lang string"
     ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    out = extraction_plan(pages, dedup=strategy).collect()
+    out = extraction_plan(pages).collect()
     assert len(out) == 1
     assert out[0]["title"] == "NEW"
 

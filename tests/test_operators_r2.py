@@ -9,12 +9,8 @@ import re
 
 import pytest
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, executed_plan
 from .oracle_harness import compare
-
-
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_simhash_signature_build_is_mapside(spark):
@@ -24,35 +20,27 @@ def test_simhash_signature_build_is_mapside(spark):
     groupBy; round 2 folds in-row arrays)."""
     from readability_py_spark.operators.dedup import q_simhash_docs
 
-    plan = _physical_plan(q_simhash_docs(spark, SF_SMOKE))
+    plan = executed_plan(q_simhash_docs(spark, SF_SMOKE))
     assert "HashAggregate" not in plan, plan
     assert len(re.findall(r"Exchange", plan)) <= 1, plan
 
 
 def test_extraction_plan_single_exchange(spark):
-    """Both dedup strategies must stay single-exchange (two full-payload
+    """Dedup-latest must stay single-exchange (two full-payload
     shuffles was the round-1 shape and the main 8→32-core scaling
-    overhead). window: REPARTITION_BY_NUM (AQE-coalescing-exempt, even
-    tasks) + partition-local window with the top-1 limit pushed below
-    the sort. agg: partial_max_by below the exchange (duplicate
-    payloads cut map-side before they cost network bytes)."""
+    overhead): REPARTITION_BY_NUM (AQE-coalescing-exempt, even tasks)
+    + partition-local window with the top-1 limit pushed below the
+    sort."""
     from readability_py_spark.plans.extract_job import (
         extraction_plan,
         pages_from_documents,
     )
 
     pages = pages_from_documents(spark, SF_SMOKE)
-    plan = _physical_plan(extraction_plan(pages, num_partitions=8))
+    plan = executed_plan(extraction_plan(pages, num_partitions=8))
     assert len(re.findall(r"Exchange", plan)) == 1, plan
     assert "REPARTITION_BY_NUM" in plan, plan
     assert "WindowGroupLimit" in plan, plan
-
-    plan_agg = _physical_plan(
-        extraction_plan(pages, num_partitions=8, dedup="agg")
-    )
-    assert len(re.findall(r"Exchange", plan_agg)) == 1, plan_agg
-    assert "partial_max_by" in plan_agg, plan_agg
-    assert plan_agg.index("partial_max_by") > plan_agg.index("Exchange"), plan_agg
 
 
 def test_bucketed_extraction_zero_exchange(spark, tmp_path):
@@ -72,7 +60,7 @@ def test_bucketed_extraction_zero_exchange(spark, tmp_path):
         "parquet"
     ).mode("overwrite").saveAsTable(tbl)
     try:
-        plan = _physical_plan(
+        plan = executed_plan(
             extraction_plan(spark.table(tbl), assume_clustered=True)
         )
         assert len(re.findall(r"Exchange", plan)) == 0, plan

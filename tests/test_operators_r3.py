@@ -15,11 +15,7 @@ import re
 import struct
 import zlib
 
-from .conftest import SF_ORACLE, SF_SMOKE
-
-
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from .conftest import SF_ORACLE, SF_SMOKE, executed_plan
 
 
 # ---------------------------------------------------------------------------
@@ -31,13 +27,26 @@ def test_simhash_capped_drops_hot_buckets(spark):
     """The cap must actually bite: the sf documents table carries a
     mass-duplicated cluster, so the capped query returns strictly fewer
     pairs than the uncapped one, and the exact-dup side channel emits
-    hamming-0 pairs for the hot bucket's byte-identical members."""
+    hamming-0 pairs for the hot bucket's byte-identical members. The
+    uncapped count is the plain hi16 band join + hamming ≤ 6 verify
+    over the same signatures."""
     from readability_py_spark.operators.dedup import (
-        q_simhash_dup_pairs,
+        q_simhash_docs,
         q_simhash_pairs_capped,
     )
 
-    uncapped = q_simhash_dup_pairs(spark, SF_ORACLE).count()
+    q_simhash_docs(spark, SF_ORACLE).createOrReplaceTempView("sig_uncapped")
+    uncapped = spark.sql(
+        """
+        WITH banded AS (
+          SELECT doc_id, simhash, shiftright(simhash, 16) AS hi16
+          FROM sig_uncapped
+        )
+        SELECT a.doc_id, b.doc_id
+        FROM banded a JOIN banded b ON a.hi16 = b.hi16 AND a.doc_id < b.doc_id
+        WHERE bit_count(a.simhash ^ b.simhash) <= 6
+        """
+    ).count()
     capped_df = q_simhash_pairs_capped(spark, SF_ORACLE)
     rows = capped_df.collect()
     assert 0 < len(rows) < uncapped
@@ -83,7 +92,7 @@ def test_embedding_near_dups_plan_is_bucket_routed(spark):
     )
 
     df = q_embedding_near_dups(spark, SF_ORACLE)
-    plan = _physical_plan(df)
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # the candidate join keys include bucket (and table id), not label
@@ -146,7 +155,7 @@ def test_ann_ivf_plan_and_recall(spark):
     )
 
     df = q_ann_ivf_topk(spark, SF_ORACLE)
-    plan = _physical_plan(df)
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert re.search(r"cell#\d+", plan), plan

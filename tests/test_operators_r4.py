@@ -8,7 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, executed_plan
 
 URL_CASES = [
     # adjacent tracking params collapse in one pass (advisor r3 medium)
@@ -51,7 +51,7 @@ def test_repetition_stats_plan_is_map_only(spark):
     from readability_py_spark.operators.textstats import q_repetition_stats
 
     df = q_repetition_stats(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     # exactly one exchange: the round-robin that parallelizes the
     # single-file test scan; no hash shuffle of gram rows anywhere
     assert plan.count("Exchange") == 1, plan
@@ -151,7 +151,7 @@ def test_gopher_lines_covers_both_sides(spark):
     assert any(k[0] is True for k in agg), agg
     assert any(k[1] is False for k in agg), agg
     assert any(k[1] is True for k in agg), agg
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "hashpartitioning" not in plan.lower(), plan
 
 
@@ -165,7 +165,7 @@ def test_pipeline_gate_shape_and_collapse(spark):
     from readability_py_spark.operators.pipeline import q_pipeline_gate
 
     df = q_pipeline_gate(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     low = plan.lower()
     assert low.count("exchange hashpartitioning") == 1, plan
     assert low.count("exchange roundrobin") == 1, plan
@@ -186,22 +186,29 @@ def test_pipeline_gate_shape_and_collapse(spark):
 
 
 def test_minhash_fast_identical_sets_share_signatures(spark):
-    from readability_py_spark.operators.dedup import (
-        _band_signatures,
-        _minhash_fast_col,
-    )
+    from readability_py_spark.operators.dedup import _band_signatures
 
     df = spark.createDataFrame(
         [(1, ["a b", "b c", "c d"]), (2, ["a b", "b c", "c d"]), (3, ["x y"])],
         "doc_id long, sh array<string>",
     )
-    sig = _band_signatures(df, hash_col=_minhash_fast_col)
+    sig = _band_signatures(df, family="xxhash64")
     rows = sig.collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], {})[r["band"]] = r["band_sig"]
     assert by_doc[1] == by_doc[2]
     assert by_doc[1] != by_doc[3]
+
+
+def test_minhash_unknown_family_is_rejected(spark):
+    """The hash family is one of two names; anything else raises
+    instead of silently building md5 signatures."""
+    from readability_py_spark.operators.dedup import _band_signatures
+
+    df = spark.createDataFrame([(1, ["a b"])], "doc_id long, sh array<string>")
+    with pytest.raises(ValueError, match="sha1"):
+        _band_signatures(df, family="sha1")
 
 
 def test_minhash_fast_lsh_pipeline_equivalence(spark):
@@ -211,7 +218,6 @@ def test_minhash_fast_lsh_pipeline_equivalence(spark):
     equality holds as long as band recall covers the true pairs)."""
     from readability_py_spark.operators.dedup import (
         _band_signatures,
-        _minhash_fast_col,
         _persist,
         _shingled,
         minhash_lsh_dups_from,
@@ -226,7 +232,7 @@ def test_minhash_fast_lsh_pipeline_equivalence(spark):
     release_caches()
     sh = _persist(_shingled(spark, SF_SMOKE).select("doc_id", "sh"))
     fast_sig = _persist(
-        _band_signatures(_shingled(spark, SF_SMOKE), hash_col=_minhash_fast_col)
+        _band_signatures(_shingled(spark, SF_SMOKE), family="xxhash64")
     )
     fast_pairs = {
         (r["a_id"], r["b_id"], r["jaccard"])
@@ -300,10 +306,7 @@ def test_frame_sample_plan(spark):
     # one doc_id hash exchange of the 1x input; nothing else moves
     # (AQE's final-plan dump may render the exchange with extra
     # wrapper nodes, so count the partitioning spec, not the word)
-    plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    # after execution AQE dumps "== Final Plan ==" AND "== Initial
-    # Plan ==" — inspect only the final one
-    plan = plan.split("== initial plan ==")[0]
+    plan = executed_plan(df).lower()
     assert plan.count("hashpartitioning(doc_id") == 1, plan
     assert "singlepartition" not in plan, plan
     assert "roundrobin" not in plan, plan

@@ -10,12 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMOKE
-
-
-def _final_plan(df) -> str:
-    plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    return plan.split("== initial plan ==")[0]
+from .conftest import SF_SMOKE, executed_plan
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +52,7 @@ def test_repetition_stats_presplit_input_is_exchange_free(spark, tmp_path):
     )
     df = q_repetition_stats(spark, sf)
     df.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "exchange" not in plan, plan
     # same answer as the single-split path
     a = sorted(map(tuple, df.collect()))
@@ -83,7 +78,7 @@ def test_simhash_presplit_input_has_no_repartition_hint(spark, tmp_path):
     docs.createOrReplaceTempView("documents")
     df = spark.sql(_simhash_sql("spark", hint=hint))
     df.write.format("noop").mode("overwrite").save()
-    assert "exchange" not in _final_plan(df)
+    assert "exchange" not in executed_plan(df).lower()
 
 
 # ---------------------------------------------------------------------------
@@ -139,7 +134,7 @@ def test_cc_union_find_plan_is_one_task_over_cached_pairs(spark):
 
     df = connected_components(_edges_df(spark, CC_TEST_PAIRS))
     df.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     release_caches()
     assert "mapinpandas" in plan, plan
     assert "singlepartition" in plan, plan
@@ -159,7 +154,7 @@ def test_cc_step_plan_is_keyed_joins_plus_one_agg(spark):
     # core propagation (no jump): exactly one equi-join + one min-agg
     step = _cc_step(sym, labels, jump=False)
     step.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(step)
+    plan = executed_plan(step).lower()
     assert "cartesianproduct" not in plan, plan
     assert "broadcastnestedloop" not in plan, plan
     n_joins = sum(plan.count(j) for j in ("sortmergejoin", "broadcasthashjoin", "shuffledhashjoin"))
@@ -171,7 +166,7 @@ def test_cc_step_plan_is_keyed_joins_plus_one_agg(spark):
 
     stepj = _cc_step(sym, labels, jump=True)
     stepj.write.format("noop").mode("overwrite").save()
-    planj = _final_plan(stepj)
+    planj = executed_plan(stepj).lower()
     release_caches()
     assert "cartesianproduct" not in planj, planj
     assert "broadcastnestedloop" not in planj, planj
@@ -225,7 +220,7 @@ def test_decontaminate_flags_eval_slice_and_stays_broadcast(spark):
     # HashAggregate — i.e. gram rows collapse to one row per doc
     # map-side BEFORE they shuffle — and the gram relation itself
     # never hash-exchanges
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "broadcasthashjoin" in plan, plan
     assert "hashpartitioning(g#" not in plan, plan  # grams never shuffle
     assert "partial_max" in plan and "partial_sum" in plan, plan
@@ -254,7 +249,7 @@ def test_decontaminate_presplit_corpus_side_is_exchange_free(spark, tmp_path):
     )
     df = q_decontaminate(spark, sf)
     df.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "roundrobin" not in plan, plan
     assert "hashpartitioning(g#" not in plan, plan  # grams never shuffle
     assert "partial_max" in plan and "partial_sum" in plan, plan
@@ -314,6 +309,20 @@ def test_frame_sample_batch_snaps_and_dedupes_on_frame_grid():
 # ---------------------------------------------------------------------------
 
 
+# retired queries that nothing ran any more (neither the driver, bench.py
+# nor a surviving query), deleted together with their oracles
+DELETED_QUERIES = (
+    "ann_lsh_buckets",
+    "explode_words",
+    "media_meta",
+    "minhash_signatures",
+    "ngram_jaccard_dups",
+    "set_intersect",
+    "set_union",
+    "simhash_dup_pairs",
+)
+
+
 def test_r5_driver_dict_composition():
     from readability_py_spark.operators import merged_queries
 
@@ -321,11 +330,18 @@ def test_r5_driver_dict_composition():
     assert len(q) == 50
     for name in ("dedup_groups", "decontaminate", "pipeline_dedup_groups"):
         assert name in q and name in o
-    for name in ("media_meta", "set_intersect", "ngram_jaccard_dups"):
-        assert name not in q
     qa, oa = merged_queries(include_retired=True)
-    for name in ("media_meta", "set_intersect", "ngram_jaccard_dups"):
-        assert name in qa and name in oa
+    for name in DELETED_QUERIES:  # the driver dicts are subsets of these
+        assert name not in qa and name not in oa
+
+
+def test_every_retired_query_is_benched():
+    """A retiree leaves the driver dict but must stay timed by bench.py;
+    a query that nothing runs is deleted instead of retired."""
+    import bench
+    from readability_py_spark.operators import RETIRED
+
+    assert RETIRED <= set(bench.HEADLINE), RETIRED - set(bench.HEADLINE)
 
 
 # ---------------------------------------------------------------------------
@@ -367,7 +383,7 @@ def test_pack_sequences_plan_one_bucket_shuffle_no_global_sort(spark):
 
     df = q_pack_sequences(spark, SF_SMOKE)
     df.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert plan.count("hashpartitioning(bucket") == 1, plan
     assert "rangepartitioning" not in plan, plan
     assert "roundrobin" not in plan, plan
@@ -423,11 +439,11 @@ def test_sampling_and_scrub_plans_are_map_only(spark, tmp_path):
 
     df = q_sample_stratified(spark, SF_SMOKE)
     df.write.format("noop").mode("overwrite").save()
-    assert "exchange" not in _final_plan(df)
+    assert "exchange" not in executed_plan(df).lower()
 
     df = q_pii_scrub(spark, SF_SMOKE)
     df.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "hashpartitioning" not in plan, plan
     assert plan.count("exchange roundrobin") <= 1, plan
 
@@ -439,7 +455,7 @@ def test_sampling_and_scrub_plans_are_map_only(spark, tmp_path):
     )
     df = q_pii_scrub(spark, sf)
     df.write.format("noop").mode("overwrite").save()
-    assert "exchange" not in _final_plan(df)
+    assert "exchange" not in executed_plan(df).lower()
 
 
 def test_tfidf_cosine_pairs_shape_and_semantics(spark):
@@ -458,11 +474,11 @@ def test_tfidf_cosine_pairs_shape_and_semantics(spark):
         TFIDF_N,
         q_tfidf_cosine_pairs,
     )
-    from readability_py_spark.operators.textstats import _gram_array
+    from readability_py_spark.operators.textstats import gram_array, words_of
     from readability_py_spark.session import load_table
 
     df = q_tfidf_cosine_pairs(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "cartesianproduct" not in plan
     rows = df.collect()
     assert rows, "no near-dup pairs at smoke SF"
@@ -473,7 +489,7 @@ def test_tfidf_cosine_pairs_shape_and_semantics(spark):
     a_id, b_id = rows[0].a_id, rows[0].b_id
     docs = (
         load_table(spark, SF_SMOKE, "documents")
-        .select("doc_id", _gram_array(F.col("text"), TFIDF_N).alias("g"))
+        .select("doc_id", gram_array(words_of(F.col("text")), TFIDF_N).alias("g"))
         .collect()
     )
     n_total = len(docs)
@@ -538,7 +554,7 @@ def test_events_asof_join_plan_is_single_exchange_no_join(spark):
     quadratic at scale."""
     from readability_py_spark.operators.timeseries import q_events_asof_join
 
-    plan = _final_plan(q_events_asof_join(spark, SF_SMOKE))
+    plan = executed_plan(q_events_asof_join(spark, SF_SMOKE)).lower()
     assert "join" not in plan
     assert plan.count("exchange hashpartitioning") == 1
     assert "window" in plan
@@ -585,7 +601,7 @@ def test_range_count_join_is_equi_join_not_nested_loop(spark):
     (what Spark gives the naive inequality predicate)."""
     from readability_py_spark.operators.timeseries import q_range_count_join
 
-    plan = _final_plan(q_range_count_join(spark, SF_SMOKE))
+    plan = executed_plan(q_range_count_join(spark, SF_SMOKE)).lower()
     assert "broadcastnestedloop" not in plan
     assert "cartesian" not in plan
     assert any(
@@ -643,7 +659,7 @@ def test_winnow_dup_candidates_plan_and_semantics(spark):
 
     t0 = time.monotonic()
     df = q_winnow_dup_candidates(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "broadcastnestedloop" not in plan
     assert "cartesian" not in plan
     rows = df.collect()
@@ -671,7 +687,7 @@ def test_quality_classifier_is_map_only_and_integer_exact(spark):
     assert len(QC_WEIGHTS) == QC_DIM
     assert all(-500 <= w <= 500 for w in QC_WEIGHTS)
     df = q_quality_classifier(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "join" not in plan
     assert "generate" not in plan
     # only the split-starvation repartition may appear, never a hash
@@ -694,12 +710,11 @@ def test_events_rollup_multires_reuses_partials(spark):
 
     df = q_events_rollup_multires(spark, SF_SMOKE)
     df.write.format("noop").mode("overwrite").save()
-    # full AQE plan text (the _final_plan split truncates the union's
-    # later branches): the three output branches must all read the
-    # hourly cache — hourly projection, daily rollup, monthly rollup —
-    # so InMemoryTableScan appears >= 3 times and no branch rescans
-    # raw events
-    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    # the three output branches must all read the hourly cache —
+    # hourly projection, daily rollup, monthly rollup — so
+    # InMemoryTableScan appears >= 3 times and no branch rescans raw
+    # events
+    plan = executed_plan(df).lower()
     release_caches()
     assert plan.count("inmemorytablescan") >= 3, plan
     rows = q_events_rollup_multires(spark, SF_SMOKE).collect()

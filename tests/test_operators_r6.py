@@ -7,24 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMOKE
-
-
-def _final_plan(df) -> str:
-    plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    return plan.split("== initial plan ==")[0]
-
-
-def _full_plan(df) -> str:
-    """The UNtruncated executed-plan string. _final_plan cuts at the
-    first '== initial plan ==' marker to drop the adaptive duplicate —
-    but a query whose eager-persisted cache BUILD plan itself went
-    adaptive (any persist above a gated repartition, r7) embeds a
-    nested finished AdaptiveSparkPlan, and the cut at ITS marker
-    silently drops the rest of the OUTER plan. Use this for plans with
-    persisted-relation subtrees; nested cache-build initial sections
-    stay in the string, so assertions must tolerate them."""
-    return df._jdf.queryExecution().executedPlan().toString().lower()
+from .conftest import SF_SMOKE, executed_plan
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +32,7 @@ def test_media_decode_presplit_payloads_are_exchange_free(spark):
         .select("doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
         .repartition(n)
     )
-    plan = _final_plan(media_decode_plan(payloads.cache()))
+    plan = executed_plan(media_decode_plan(payloads.cache())).lower()
     # the only exchange allowed is the one inside the .repartition(n)
     # input itself; count exchanges in the decode plan ABOVE the cached
     # input: cache() makes the input an InMemoryRelation leaf
@@ -58,7 +41,7 @@ def test_media_decode_presplit_payloads_are_exchange_free(spark):
     videos = payloads.withColumn("duration_ms", F.lit(3000)).withColumn(
         "fps", F.lit(10)
     )
-    plan2 = _final_plan(frame_sample_plan(videos.cache()))
+    plan2 = executed_plan(frame_sample_plan(videos.cache())).lower()
     assert "exchange" not in plan2.split("inmemorytablescan")[0], plan2
     payloads.unpersist()
     videos.unpersist()
@@ -77,12 +60,12 @@ def test_media_decode_single_split_still_parallelizes(spark):
         payloads.rdd.getNumPartitions()
         < spark.sparkContext.defaultParallelism
     )
-    plan = _final_plan(media_decode_plan(payloads))
+    plan = executed_plan(media_decode_plan(payloads)).lower()
     assert "exchange hashpartitioning(doc_id" in plan, plan
     # explicit width always wins; assume_clustered always skips
-    forced = _final_plan(media_decode_plan(payloads, num_partitions=7))
+    forced = executed_plan(media_decode_plan(payloads, num_partitions=7)).lower()
     assert "exchange hashpartitioning(doc_id" in forced
-    skipped = _final_plan(media_decode_plan(payloads, assume_clustered=True))
+    skipped = executed_plan(media_decode_plan(payloads, assume_clustered=True)).lower()
     assert "exchange" not in skipped, skipped
 
 
@@ -324,8 +307,7 @@ def test_decontaminate_bloom_corpus_side_is_exchange_free(spark, tmp_path):
     )
     df = q_decontaminate_bloom(spark, sf)
     df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    plan = plan.split("== initial plan ==")[0]
+    plan = executed_plan(df).lower()
     assert "roundrobin" not in plan, plan
     assert "hashpartitioning(doc_id" not in plan, plan
 
@@ -345,7 +327,7 @@ def test_shuffle_shards_has_no_global_sort(spark):
     df = q_shuffle_shards(spark, SF_SMOKE)
     # exchanges materialize in EnsureRequirements — read the executed
     # plan, not sparkPlan() (which still shows the bare Window)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "singlepartition" not in plan, plan
     assert "hashpartitioning(split" in plan, plan
 
@@ -421,7 +403,7 @@ def _build_above_exchange(df, marker: str) -> None:
     OUTPUT, so the build computed below the exchange — serially on the
     single-split scan (the whole 17-20 s winnow build was one core).
     The hint must live in an inner subquery over the raw columns."""
-    lines = _final_plan(df).splitlines()
+    lines = executed_plan(df).lower().splitlines()
     marker_i = [i for i, l in enumerate(lines) if marker in l]
     exchange_i = [i for i, l in enumerate(lines) if "exchange" in l]
     assert marker_i, "\n".join(lines)
@@ -527,7 +509,7 @@ def test_bm25_search_plan_is_takeordered_and_shuffle_free(spark):
     from readability_py_spark.operators.search import q_bm25_search
 
     df = q_bm25_search(spark, SF_SMOKE)
-    plan = _full_plan(df)
+    plan = executed_plan(df).lower()
     assert "takeorderedandproject" in plan, plan
     assert "hashpartitioning" not in plan, plan
     assert "broadcastnestedloopjoin" in plan, plan  # 1-row stats side
@@ -606,7 +588,7 @@ def test_semdedup_plan_broadcasts_pool_and_never_shuffles_vectors(spark):
     from readability_py_spark.operators.similarity import q_semdedup
 
     df = q_semdedup(spark, SF_SMOKE)
-    plan = _full_plan(df)
+    plan = executed_plan(df).lower()
     assert plan.count("broadcasthashjoin") == 2, plan
     assert "sortmergejoin" not in plan, plan
     assert "hashpartitioning(cell" in plan, plan  # pool-rank window
@@ -655,7 +637,7 @@ def test_bpe_merge_step_plan_and_semantics(spark):
     )
 
     df = q_bpe_merge_step(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "takeorderedandproject" in plan, plan
     assert plan.count("exchange hashpartitioning") <= 2, plan
     rows = df.collect()
@@ -683,7 +665,7 @@ def test_url_blocklist_plan_and_channels(spark):
     )
 
     df = q_url_blocklist(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "broadcasthashjoin" in plan, plan
     assert "hashpartitioning" not in plan, plan
     rows = df.collect()
@@ -709,7 +691,7 @@ def test_unicode_nfc_channels_and_plan(spark):
     from readability_py_spark.operators.textstats import q_unicode_nfc
 
     df = q_unicode_nfc(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "arrowevalpython" in plan, plan
     rows = df.collect()
     assert rows
@@ -760,7 +742,7 @@ def test_pdf_text_extract_parse_semantics(spark):
     from readability_py_spark.operators.multimodal import q_pdf_text_extract
 
     df = q_pdf_text_extract(spark, SF_SMOKE)
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "exchange" not in plan, plan
     rows = df.collect()
     assert rows

@@ -4,32 +4,7 @@ operator to an independent formulation of the same result."""
 
 from __future__ import annotations
 
-import os
-import sys
-
-import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
-
-SF_SMOKE = "/root/testdata/sf0.001"
-SF_MID = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from readability_py_spark.session import build_session
-
-    s = build_session(
-        app_name="rps-tests-r7", master="local[4]", shuffle_partitions="4"
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-
-
-def _final_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString().lower()
+from .conftest import SF_ORACLE, SF_SMOKE, executed_plan
 
 
 def test_price_quartiles_bitwise_matches_percentile_aggregate(spark):
@@ -42,7 +17,7 @@ def test_price_quartiles_bitwise_matches_percentile_aggregate(spark):
     from readability_py_spark.operators.relational import q_price_quartiles
     from readability_py_spark.session import load_table
 
-    for sf_dir in (SF_SMOKE, SF_MID):
+    for sf_dir in (SF_SMOKE, SF_ORACLE):
         mine = {
             r["l_returnflag"]: (r["p25"], r["p50"], r["p75"], r["p90"])
             for r in q_price_quartiles(spark, sf_dir).collect()
@@ -85,7 +60,7 @@ def test_price_quartiles_plan_has_no_percentile_buffer(spark):
 
     df = q_price_quartiles(spark, SF_SMOKE)
     df.write.format("noop").mode("overwrite").save()
-    plan = _final_plan(df)
+    plan = executed_plan(df).lower()
     assert "percentile" not in plan, plan
     assert "objecthashaggregate" not in plan, plan
     assert "hashpartitioning(l_returnflag" in plan, plan
@@ -99,16 +74,17 @@ def test_decontaminate_matches_in_row_intersect_form(spark):
     from readability_py_spark.operators.textstats import (
         DECON_N,
         DECON_SLICE,
-        _gram_array,
+        gram_array,
         q_decontaminate,
+        words_of,
     )
     from readability_py_spark.session import load_table
 
-    docs = load_table(spark, SF_MID, "documents")
-    grams = F.array_distinct(_gram_array(F.col("text"), DECON_N))
+    docs = load_table(spark, SF_ORACLE, "documents")
+    grams = F.array_distinct(gram_array(words_of(F.col("text")), DECON_N))
     ev = (
         docs.filter(F.col("doc_id") % DECON_SLICE == 0)
-        .select(F.explode(_gram_array(F.col("text"), DECON_N)).alias("g"))
+        .select(F.explode(gram_array(words_of(F.col("text")), DECON_N)).alias("g"))
         .distinct()
     )
     evarr = ev.agg(F.array_sort(F.collect_set("g")).alias("evg")).select(
@@ -129,6 +105,6 @@ def test_decontaminate_matches_in_row_intersect_form(spark):
     }
     mine = {
         r["doc_id"]: (r["n_grams"], r["overlap_cnt"], r["contaminated"])
-        for r in q_decontaminate(spark, SF_MID).collect()
+        for r in q_decontaminate(spark, SF_ORACLE).collect()
     }
     assert mine == ref
