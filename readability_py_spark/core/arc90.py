@@ -153,7 +153,13 @@ def unescape(text: str) -> str:
 
 # Fast-path guard: if a string contains none of these, the MULTILINE
 # trim regex degenerates to .strip(' ') and normalize to identity.
-_ws_slow_re = re.compile(r"[\t\n\r\v\f]|  ", _A)
+# All five control characters are non-printable, so isprintable()
+# (a C loop, no regex call) skips the search for most strings.
+_ws_ctl_re = re.compile(r"[\t\n\r\v\f]", _A)
+
+
+def _needs_ws_regex(s: str) -> bool:
+    return "  " in s or (not s.isprintable() and bool(_ws_ctl_re.search(s)))
 
 
 def get_inner_text(node, trim_spaces=True, normalize_spaces=True) -> str:
@@ -179,13 +185,13 @@ def get_inner_text(node, trim_spaces=True, normalize_spaces=True) -> str:
         ]
         text_content = " ".join(strings)
         if cacheable:
-            if not _ws_slow_re.search(text_content):
+            if not _needs_ws_regex(text_content):
                 result = text_content.strip(" ")
             else:
                 result = normalizeRe.sub(" ", trimRe.sub("", text_content))
             node._itext_cache = (_tree_epoch(), result)
             return result
-    if trim_spaces and normalize_spaces and not _ws_slow_re.search(text_content):
+    if trim_spaces and normalize_spaces and not _needs_ws_regex(text_content):
         # single-line, single-spaced: trim == strip(' '), normalize == id
         return text_content.strip(" ")
     if trim_spaces:
@@ -217,6 +223,40 @@ def make_tag(name: str, attrs=None) -> Element:
         for k, v in attrs
     ]
     return Element(name, converted, self_closing=name in SELF_CLOSING_TAGS)
+
+
+# _grab_article turns a div holding none of these into a <p>.
+_DIV_BLOCK_TAGS = frozenset(
+    ("a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul")
+)
+# _prep_article keeps an empty <p> that holds one of these.
+_MEDIA_TAGS = frozenset(("img", "embed", "object", "iframe"))
+# _prepare_document's removals and rewrites.
+_PREPARE_TAGS = frozenset(("script", "style", "link", "font", "textarea"))
+# _prep_article's _clean passes, in their order.
+_CLEAN_ORDER = ("form", "object", "h1", "iframe", "hr")
+# _clean_conditionally's per-node counts and embeds.
+_CONDITIONAL_TAGS = frozenset(("p", "img", "li", "input", "embed", "object"))
+
+
+def nodes_by_name(root: Element, names) -> dict:
+    """``{name: root.find_all(name)}`` for every name, from one walk.
+    Valid wherever no mutation sits between the per-name walks it
+    replaces."""
+    found = {name: [] for name in names}
+    for node in root.find_all(frozenset(names)):
+        found[node.name].append(node)
+    return found
+
+
+def _is_under(node, root) -> bool:
+    """Whether ``root`` is a proper ancestor of ``node``."""
+    p = node.parent
+    while p is not None:
+        if p is root:
+            return True
+        p = p.parent
+    return False
 
 
 _APOLOGY = (
@@ -312,7 +352,7 @@ class Arc90Document:
 
         article_title = self._get_article_title()
 
-        if not len(self._osoup.find_all("body")):
+        if self._osoup.find("body") is None:
             article_content = make_tag("p")
             article_content.set_string(_APOLOGY)
         else:
@@ -425,9 +465,9 @@ class Arc90Document:
     def _clean_class_attr(self) -> None:
         real_body = self._fsoup.find("div", attrs={"id": "readability-content"})
         if real_body:
-            for e in real_body.find_all(attrs={"class": True}):
-                cls = e["class"]
-                if cls.find("readability") == -1:
+            for e in real_body.find_all(True):
+                cls = e.get("class")
+                if cls is not None and cls.find("readability") == -1:
                     del e["class"]
 
     def _fix_lists(self) -> None:
@@ -606,20 +646,21 @@ class Arc90Document:
         margin_ratio = MARGIN_RATIO[self._conf["read_margin"]]
         image_width_threshold = 800 * margin_ratio
 
+        images = self._fsoup.find_all("img")
         if self._url:
             bits = urllib.parse.urlsplit(self._url)
             hostname = "%s://%s" % (bits[0], bits[1])
             rel_uri = self._url[: self._url.rfind("/") + 1]
-            for img in self._fsoup.find_all("img", attrs={"src": True}):
-                img_src = img["src"]
-                if img_src.startswith("http"):
+            for img in images:
+                img_src = img.get("src")
+                if img_src is None or img_src.startswith("http"):
                     continue
                 elif img_src.startswith("/"):
                     img["src"] = hostname + img_src
                 else:
                     img["src"] = rel_uri + img_src
 
-        for img in self._fsoup.find_all("img"):
+        for img in images:
             width = self._get_size(img.get("width"))
             height = self._get_size(img.get("height"))
             if width:
@@ -700,15 +741,21 @@ class Arc90Document:
             html_element.append(body)
         self._osoup.find("body")["id"] = "readabilityBody"
 
-        for script in self._osoup.find_all("script"):
+        # One walk stands in for one find_all per name: script and
+        # textarea hold only text, and whatever sits inside an already
+        # extracted <style> is detached, so acting on it changes no
+        # output.
+        found = nodes_by_name(self._osoup, _PREPARE_TAGS)
+        for script in found["script"]:
             script.extract()
-        for style in self._osoup.find_all("style"):
+        for style in found["style"]:
             style.extract()
-        for link in self._osoup.find_all("link", attrs={"rel": "stylesheet"}):
-            link.extract()
-        for font in self._osoup.find_all("font"):
+        for link in found["link"]:
+            if link.get("rel") == "stylesheet":
+                link.extract()
+        for font in found["font"]:
             self._replace_element(font, "span")
-        for ta in self._osoup.find_all("textarea"):
+        for ta in found["textarea"]:
             if ta.string:
                 ta.set_string(
                     str(ta.string).replace("<", "&lt;").replace(">", "&gt;")
@@ -822,8 +869,6 @@ class Arc90Document:
     # -- article grab (readability.py:587-779) ------------------------------
     def _grab_article(self):
         def match_unlikely_candidates(node):
-            if not isinstance(node, Element):
-                return False
             if node.name == "body":
                 return False
             unlikely = node.get("class", "") + node.get("id", "")
@@ -836,14 +881,14 @@ class Arc90Document:
         body = self._osoup.find("body")
 
         if self._conf["strip_unlike"]:
-            for node in body.find_all(match_unlikely_candidates):
+            unlikely = [
+                n for n in body.find_all(True) if match_unlikely_candidates(n)
+            ]
+            for node in unlikely:
                 node.extract()
 
         for node in body.find_all("div"):
-            children = node.find_all(
-                ["a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"]
-            )
-            if not len(children):
+            if node.find(_DIV_BLOCK_TAGS) is None:
                 self._replace_element(node, "p")
             else:
                 new_div = make_tag("div", attrs=node.attrs)
@@ -1014,11 +1059,7 @@ class Arc90Document:
     def _prep_article(self, article_content: Element) -> None:
         self._clean_styles(article_content)
 
-        self._clean(article_content, "form")
-        self._clean(article_content, "object")
-        self._clean(article_content, "h1")
-        self._clean(article_content, "iframe")
-        self._clean(article_content, "hr")
+        self._clean(article_content)
 
         subtitles = article_content.find_all("h2")
         if len(subtitles) == 1:
@@ -1026,14 +1067,9 @@ class Arc90Document:
                 s.extract()
 
         for paragraph in article_content.find_all("p"):
-            img_count = len(paragraph.find_all("img"))
-            embed_count = len(
-                paragraph.find_all(["embed", "object", "iframe"])
-            )
             if (
-                img_count == 0
-                and embed_count == 0
-                and len(get_inner_text(paragraph)) == 0
+                len(get_inner_text(paragraph)) == 0
+                and paragraph.find(_MEDIA_TAGS) is None
             ):
                 paragraph.extract()
 
@@ -1061,22 +1097,28 @@ class Arc90Document:
                 h.extract()
 
     def _clean_styles(self, node) -> None:
-        # readability.py:843-848
-        for c in node.contents:
-            if isinstance(c, Element):
-                if c.get("class", "") != "readability-styled" and c.has_attr(
-                    "style"
-                ):
-                    del c["style"]
-                self._clean_styles(c)
+        # readability.py:843-848, without the recursion: deleting an
+        # attribute touches only its own node, so one preorder walk of
+        # the subtree gives the same result at any depth
+        for c in node.find_all(True):
+            if c.get("class", "") != "readability-styled" and c.has_attr(
+                "style"
+            ):
+                del c["style"]
 
-    def _clean(self, article_content: Element, tag: str) -> None:
-        # readability.py:850-855
-        is_embed = tag in ("object", "embed", "iframe")
-        for c in article_content.find_all(tag):
-            if is_embed and videoRe.search(c.render()):
-                continue
-            c.extract()
+    def _clean(self, article_content: Element) -> None:
+        # readability.py:850-855, run there once per tag of
+        # _CLEAN_ORDER. One walk gathers every tag's nodes up front;
+        # those still attached when a tag's turn comes are exactly
+        # what find_all(tag) would return then, in the same order
+        # (the passes only extract).
+        found = nodes_by_name(article_content, _CLEAN_ORDER)
+        for tag in _CLEAN_ORDER:
+            is_embed = tag in ("object", "embed", "iframe")
+            for c in [c for c in found[tag] if _is_under(c, article_content)]:
+                if is_embed and videoRe.search(c.render()):
+                    continue
+                c.extract()
 
     def _clean_conditionally(self, article_content: Element, tag: str) -> None:
         # readability.py:857-923
@@ -1086,13 +1128,14 @@ class Arc90Document:
             if weight < 0:
                 node.extract()
             elif self._get_char_count(node, ",") < 10:
-                p = len(node.find_all("p"))
-                img = len(node.find_all("img"))
-                li = len(node.find_all("li")) - 100
-                input_count = len(node.find_all("input"))
+                found = nodes_by_name(node, _CONDITIONAL_TAGS)
+                p = len(found["p"])
+                img = len(found["img"])
+                li = len(found["li"]) - 100
+                input_count = len(found["input"])
 
                 embed_count = 0
-                for embed in node.find_all(["embed", "object"]):
+                for embed in found["embed"] + found["object"]:
                     if not videoRe.search(embed.render()):
                         embed_count += 1
 

@@ -361,36 +361,23 @@ class Element(_DirectionalFinds):
         self.set_string(value)
 
     # -- search ------------------------------------------------------
-    def descendants(self):
-        """Document-order traversal of the subtree (excl. self) —
-        equivalent to the reference's next-pointer walk
-        (readability.py:2118-2125). Materialized list: callers always
-        consume fully before mutating (as the reference's _findAll
-        does), and the list walk is ~20% faster than a generator."""
-        out: list = []
-        stack = list(reversed(self.contents))
-        pop = stack.pop
-        push = stack.extend
-        append = out.append
-        while stack:
-            node = pop()
-            append(node)
-            if node.__class__ is Element and node.contents:
-                push(reversed(node.contents))
-        return out
-
+    # Every walk below is preorder over a stack of live iterators, one
+    # per open element: a text node costs one step of a for-loop, not
+    # a push and a pop, and no recursion limits the depth.
     def find_all(self, name=None, attrs=None, recursive=True, text=None, limit=None):
         """Match semantics of findAll/SoupStrainer
         (readability.py:2075-2089, 2129-2247) for the argument shapes
         the pipeline uses: tag-name str, list of names, dict of names,
         True, callables, and attrs dicts with str/bool values.
 
-        The preorder walk is inlined with the match test (instead of
-        materializing the whole subtree via descendants() first):
-        allocations drop from O(subtree) per call to O(matches), and
-        ``limit`` (thus ``find``) stops the walk at the first hit —
-        both matter because the extractor is memory-bandwidth-bound at
-        high core counts, and find/find_all dominate its allocations."""
+        The walk is inlined with the match test, so allocations are
+        O(matches), and ``limit`` stops the walk at the first hit.
+
+        Fast paths (no per-node ``_node_matches`` call) when ``attrs``,
+        ``text`` and ``limit`` are all None: ``True``, a str name, and
+        a list/tuple/set/frozenset/dict of names. Callable and
+        attribute filters are cheaper as a plain list filter over
+        ``find_all(True)`` than through the generic path."""
         if not recursive:
             results = []
             for node in list(self.contents):
@@ -401,49 +388,85 @@ class Element(_DirectionalFinds):
             return results
         results = []
         append = results.append
-        stack = list(reversed(self.contents))
+        stack = [iter(self.contents)]
+        push = stack.append
         pop = stack.pop
-        push = stack.extend
         # fast paths for the dominant call shapes (same trick as the
         # reference's _findAll shortcuts, readability.py:1593-1603)
         if attrs is None and text is None and limit is None:
-            if isinstance(name, str):
-                while stack:
-                    node = pop()
-                    if node.__class__ is Element:
-                        if node.name == name:
-                            append(node)
-                        if node.contents:
-                            push(reversed(node.contents))
-                return results
             if name is True:
                 while stack:
-                    node = pop()
-                    if node.__class__ is Element:
-                        append(node)
-                        if node.contents:
-                            push(reversed(node.contents))
-                return results
-            if isinstance(name, (list, tuple, set, frozenset, dict)):
-                while stack:
-                    node = pop()
-                    if node.__class__ is Element:
-                        if node.name in name:
+                    for node in stack[-1]:
+                        if node.__class__ is Element:
                             append(node)
-                        if node.contents:
-                            push(reversed(node.contents))
+                            if node.contents:
+                                push(iter(node.contents))
+                                break
+                    else:
+                        pop()
+                return results
+            if isinstance(name, (str, list, tuple, set, frozenset, dict)):
+                names = (name,) if isinstance(name, str) else name
+                while stack:
+                    for node in stack[-1]:
+                        if node.__class__ is Element:
+                            if node.name in names:
+                                append(node)
+                            if node.contents:
+                                push(iter(node.contents))
+                                break
+                    else:
+                        pop()
                 return results
         while stack:
-            node = pop()
-            if _node_matches(node, name, attrs, text):
-                append(node)
-                if limit and len(results) >= limit:
+            for node in stack[-1]:
+                if _node_matches(node, name, attrs, text):
+                    append(node)
+                    if limit and len(results) >= limit:
+                        return results
+                if node.__class__ is Element and node.contents:
+                    push(iter(node.contents))
                     break
-            if node.__class__ is Element and node.contents:
-                push(reversed(node.contents))
+            else:
+                pop()
         return results
 
     def find(self, name=None, attrs=None, recursive=True, text=None):
+        """First node ``find_all`` would return, or None.
+
+        Fast path: a str name or a list/tuple/set/frozenset of names,
+        with ``attrs`` None or a dict of str values, walks preorder and
+        returns at the first node whose name, then attrs, match. Every
+        other shape (dict-as-name, True, callables, regexes, strainers,
+        ``text=``, ``recursive=False``) goes through ``find_all``."""
+        if (
+            recursive
+            and text is None
+            and isinstance(name, (str, list, tuple, set, frozenset))
+            and (
+                attrs is None
+                or (type(attrs) is dict
+                    and all(type(v) is str for v in attrs.values()))
+            )
+        ):
+            names = (name,) if isinstance(name, str) else name
+            stack = [iter(self.contents)]
+            push = stack.append
+            pop = stack.pop
+            while stack:
+                for node in stack[-1]:
+                    if node.__class__ is Element:
+                        if node.name in names and (
+                            not attrs
+                            or all(node.get(k) == v for k, v in attrs.items())
+                        ):
+                            return node
+                        if node.contents:
+                            push(iter(node.contents))
+                            break
+                else:
+                    pop()
+            return None
         r = self.find_all(name, attrs, recursive, text, limit=1)
         return r[0] if r else None
 
@@ -681,7 +704,7 @@ def _matches_value(markup, match_against):
         markup = markup.name
     if hasattr(match_against, "match"):  # compiled regex
         return bool(markup and match_against.search(markup))
-    if isinstance(match_against, (list, tuple, set, dict)):
+    if isinstance(match_against, (list, tuple, set, frozenset, dict)):
         return markup in match_against
     return match_against == markup
 

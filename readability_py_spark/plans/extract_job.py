@@ -244,10 +244,11 @@ def run_extract_job(
     )
     # THIS run's rows only (incremental snapshot read, never a full
     # table scan — at 10^12 rows the full reread round 1 did here is
-    # an O(table) cost per checkpoint commit). The urls are new by
-    # construction: extraction_plan already anti-joined the manifest.
+    # an O(table) cost per checkpoint commit). The urls are new and
+    # unique by construction: extraction_plan anti-joined the manifest
+    # and kept one row per url, so no distinct() (a shuffle) is needed.
     this_run = catalog.read_snapshot(spark, "extracted", snap["snapshot_id"])
-    new_done = this_run.select("url").distinct()
+    new_done = this_run.select("url")
     catalog.append(new_done, "done_manifest", lineage={"for_snapshot": snap["snapshot_id"]})
     stats = (
         this_run.groupBy("part_id")

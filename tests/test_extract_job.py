@@ -163,3 +163,27 @@ def test_catalog_orphan_snapshot_invisible(spark, tmp_path):
     assert catalog.read(spark, "t").count() == 10
     snaps = catalog.snapshots("t")
     assert len(snaps) == 1 and snaps[0]["total_rows"] == 10
+
+
+def test_done_manifest_rows_are_unique_urls(spark, tmp_path):
+    """The manifest takes each run's extracted urls as they are: the
+    plan keeps one row per url and anti-joins the manifest first, so
+    duplicate crawls and resumed runs still leave one row per url."""
+    from readability_py_spark.plans.bench_extract import build_pages_df
+    from readability_py_spark.plans.extract_job import run_extract_job
+    from readability_py_spark.sources.catalog import LocalTableCatalog
+
+    out_dir = str(tmp_path / "job")
+    pages = build_pages_df(spark, 60)
+    live = pages.filter("lang != ''")
+    distinct_urls = live.select("url").distinct().count()
+    assert live.count() > distinct_urls, "corpus must hold duplicate crawls"
+
+    run_extract_job(spark, pages.limit(40), out_dir)
+    run_extract_job(spark, pages, out_dir)
+
+    catalog = LocalTableCatalog(out_dir)
+    manifest = catalog.read(spark, "done_manifest")
+    assert manifest.count() == distinct_urls
+    assert manifest.select("url").distinct().count() == distinct_urls
+    assert catalog.read(spark, "extracted").count() == distinct_urls

@@ -131,21 +131,20 @@ def main() -> None:
     # raise), report the best of the last N-1 — preferring reps whose
     # hypervisor steal% stayed under 1% (the first rep still pays
     # lingering worker/JIT warmth; a production job runs this stage
-    # for hours). 4 tasks/core keeps the last wave balanced against
-    # the retry-heavy document families. Each rep records steal% from
-    # /proc/stat — the external-noise evidence for this shared box.
+    # for hours). The UDF stage runs extraction_plan's default width,
+    # one task per core: each Python task pays a fixed setup cost, and
+    # 4 tasks/core was slower on both the mixed and the skew corpus
+    # (BENCH.md "Per-document tree walks"). Each rep records steal%
+    # from /proc/stat — the external-noise evidence for this shared box.
     import os as _os
 
     n_reps = int(_os.environ.get("SPARK_JOB_REPS", "3"))
-    n_parts = 4 * cores
     walls = []
     rep_steal = []
     for _rep in range(n_reps):
         s_before = cpu_stat()
         t0 = time.monotonic()
-        extracted = extraction_plan(
-            pages, num_partitions=n_parts, assume_clustered=bucketed
-        )
+        extracted = extraction_plan(pages, assume_clustered=bucketed)
         stats = (
             extracted.groupBy("part_id")
             .agg(
