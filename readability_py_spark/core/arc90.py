@@ -24,12 +24,7 @@ import urllib.parse
 from html.entities import name2codepoint
 from string import punctuation
 
-from .parser import (
-    SELF_CLOSING_TAGS,
-    SoupParser,
-    _attr_entity_re,
-    _convert_attr_entity,
-)
+from .parser import SoupParser, make_tag
 from .tree import Comment, Element, TextNode, clone_tree
 from .tree import mutation_epoch as _tree_epoch
 
@@ -162,43 +157,32 @@ def _needs_ws_regex(s: str) -> bool:
     return "  " in s or (not s.isprintable() and bool(_ws_ctl_re.search(s)))
 
 
-def get_inner_text(node, trim_spaces=True, normalize_spaces=True) -> str:
-    # readability.py:1215-1233; Comments are NavigableStrings and so
+def get_inner_text(node) -> str:
+    # readability.py:1215-1233 with trimSpaces and normalizeSpaces on,
+    # as every caller has them; Comments are NavigableStrings and so
     # contribute their text. Results for Elements are memoized against
     # the tree mutation epoch (pure optimization: the pipeline
     # recomputes inner text for unmutated nodes constantly).
     if not node:
         return ""
-    if isinstance(node, (TextNode, str)) and not isinstance(node, Element):
+    is_element = isinstance(node, Element)
+    if not is_element and isinstance(node, (TextNode, str)):
         text_content = str(node)
     else:
-        cacheable = trim_spaces and normalize_spaces
-        if cacheable:
-            cached = node._itext_cache
-            if cached is not None and cached[0] == _tree_epoch():
-                return cached[1]
+        cached = node._itext_cache
+        if cached is not None and cached[0] == _tree_epoch():
+            return cached[1]
         if len(node.contents) == 0:
             return ""
-        strings = [
-            get_inner_text(t, trim_spaces, normalize_spaces)
-            for t in node.contents
-        ]
-        text_content = " ".join(strings)
-        if cacheable:
-            if not _needs_ws_regex(text_content):
-                result = text_content.strip(" ")
-            else:
-                result = normalizeRe.sub(" ", trimRe.sub("", text_content))
-            node._itext_cache = (_tree_epoch(), result)
-            return result
-    if trim_spaces and normalize_spaces and not _needs_ws_regex(text_content):
+        text_content = " ".join([get_inner_text(t) for t in node.contents])
+    if not _needs_ws_regex(text_content):
         # single-line, single-spaced: trim == strip(' '), normalize == id
-        return text_content.strip(" ")
-    if trim_spaces:
-        text_content = trimRe.sub("", text_content)
-    if normalize_spaces:
-        text_content = normalizeRe.sub(" ", text_content)
-    return text_content
+        result = text_content.strip(" ")
+    else:
+        result = normalizeRe.sub(" ", trimRe.sub("", text_content))
+    if is_element:
+        node._itext_cache = (_tree_epoch(), result)
+    return result
 
 
 def clean_extraspaces(output: str) -> str:
@@ -206,23 +190,6 @@ def clean_extraspaces(output: str) -> str:
     output = killBreaksRe.sub("<br />", output)
     output = killMoreBreaksRe.sub("<p", output)
     return output
-
-
-def make_tag(name: str, attrs=None) -> Element:
-    """Tag constructor equivalent (readability.py:1775-1802): lowers
-    nothing (pipeline passes lowercase), converts numeric entities in
-    attr values, flags self-closing names."""
-    attrs = list(attrs or [])
-    converted = [
-        (
-            k,
-            _attr_entity_re.sub(_convert_attr_entity, v)
-            if isinstance(v, str) and "&" in v
-            else v,
-        )
-        for k, v in attrs
-    ]
-    return Element(name, converted, self_closing=name in SELF_CLOSING_TAGS)
 
 
 # _grab_article turns a div holding none of these into a <p>.
@@ -297,21 +264,18 @@ class Arc90Document:
         }
 
     # -- public outputs (readability.py:114-135) ----------------------
-    def get_html(
-        self, pretty_print: bool = False, remove_comments: bool = True
-    ) -> str:
-        """readability.py:114-120 — prettyPrint drives the BS3 indent
-        machinery (the reference CLI's default output path is
-        get_html(prettyPrint=True), readability.py:3278)."""
-        if remove_comments:
-            for comment in self._fsoup.find_all(
-                text=lambda t: isinstance(t, Comment)
-            ):
-                comment.extract()
+    def get_html(self, pretty_print: bool = False) -> str:
+        """readability.py:114-120, comments removed — prettyPrint drives
+        the BS3 indent machinery (the reference CLI's default output
+        path is get_html(prettyPrint=True), readability.py:3278)."""
+        for comment in self._fsoup.find_all(
+            text=lambda t: isinstance(t, Comment)
+        ):
+            comment.extract()
         output = self._fsoup.render_contents(pretty_print)
         return clean_extraspaces(output)
 
-    def get_doc(self, remove_comments: bool = True):
+    def get_doc(self):
         """Returns the output re-parsed as a soup copy — modifying it
         does not modify the real output (readability.py:122-126).
 
@@ -324,11 +288,7 @@ class Arc90Document:
         output with it, mojibake and all (caught by golden
         encodings_tail_003: a late-declared iso-8859-2 page whose
         get_doc round-trip double-decodes)."""
-        from .parser import SoupParser
-
-        return SoupParser(
-            self.get_html(remove_comments=remove_comments).encode("utf-8")
-        ).root
+        return SoupParser(self.get_html().encode("utf-8")).root
 
     def get_title(self) -> str:
         return self._articleTitle
@@ -1023,28 +983,25 @@ class Arc90Document:
             )
 
         if len(get_inner_text(article_content)) < 250:
-            if self._conf["strip_unlike"]:
-                self._conf["strip_unlike"] = False
-                self.metrics["retries"] += 1
-                self._osoup = SoupParser(self.content).root
-                self._prepare_document()
-                return self._grab_article()
-            if self._conf["weight_classes"]:
-                self._conf["weight_classes"] = False
-                self.metrics["retries"] += 1
-                self._osoup = SoupParser(self.content).root
-                self._prepare_document()
-                return self._grab_article()
+            # readability.py:762-777: drop one setting and start over
+            for flag in ("strip_unlike", "weight_classes"):
+                if self._conf[flag]:
+                    self._conf[flag] = False
+                    self.metrics["retries"] += 1
+                    self._osoup = SoupParser(self.content).root
+                    self._prepare_document()
+                    return self._grab_article()
+            # The reference's third retry drops clean_conditionally,
+            # which nothing reads (_clean_conditionally runs regardless),
+            # so starting over would repeat this pass exactly: count
+            # the retry and keep this pass's result.
             if self._conf["clean_conditionally"]:
                 self._conf["clean_conditionally"] = False
                 self.metrics["retries"] += 1
-                self._osoup = SoupParser(self.content).root
-                self._prepare_document()
-                return self._grab_article()
 
         return article_content
 
-    def _get_content_score(self, node, bonus=0):
+    def _get_content_score(self, node):
         # readability.py:781-795
         result = "unknown"
         try:
@@ -1127,7 +1084,7 @@ class Arc90Document:
 
             if weight < 0:
                 node.extract()
-            elif self._get_char_count(node, ",") < 10:
+            elif self._get_char_count(node) < 10:
                 found = nodes_by_name(node, _CONDITIONAL_TAGS)
                 p = len(found["p"])
                 img = len(found["img"])
@@ -1163,8 +1120,8 @@ class Arc90Document:
                 if to_remove:
                     node.extract()
 
-    def _get_char_count(self, node, separator=",") -> int:
-        return len(get_inner_text(node).split(separator))
+    def _get_char_count(self, node) -> int:
+        return len(get_inner_text(node).split(","))
 
     def _get_link_density(self, node) -> float:
         # readability.py:929-939

@@ -93,15 +93,8 @@ class SourceDecoder:
     """One-shot decode of a document's raw bytes, mirroring
     UnicodeDammit's constructor flow."""
 
-    def __init__(
-        self,
-        markup: bytes | str,
-        override_encodings=(),
-        smart_quotes_to: str | None = "html",
-        is_html: bool = True,
-    ):
+    def __init__(self, markup: bytes | str, override_encodings=()):
         self.declared_html_encoding: str | None = None
-        self.smart_quotes_to = smart_quotes_to
         self.tried: list[str] = []
         self.original_encoding: str | None = None
 
@@ -109,7 +102,7 @@ class SourceDecoder:
             self.unicode = markup
             return
 
-        self.markup, document_encoding, sniffed = self._detect(markup, is_html)
+        self.markup, document_encoding, sniffed = self._detect(markup)
 
         if self.markup == b"":
             self.unicode = ""
@@ -141,7 +134,7 @@ class SourceDecoder:
             self.original_encoding = None
 
     # -- steps -----------------------------------------------------
-    def _detect(self, data: bytes, is_html: bool):
+    def _detect(self, data: bytes):
         sniffed = None
         try:
             if data[:4] == b"\x4c\x6f\xa7\x94":
@@ -188,12 +181,11 @@ class SourceDecoder:
 
         xml_encoding = None
         m = _XML_DECL_RE.match(data)
-        if not m and is_html:
+        if not m:
             m = _META_CHARSET_RE.search(data)
         if m is not None:
             xml_encoding = m.groups()[0].lower().decode("ascii", "replace")
-            if is_html:
-                self.declared_html_encoding = xml_encoding
+            self.declared_html_encoding = xml_encoding
             if sniffed and xml_encoding in _SNIFF_OVERRIDABLE:
                 xml_encoding = sniffed
         return data, xml_encoding, sniffed
@@ -204,12 +196,8 @@ class SourceDecoder:
             return None
         self.tried.append(proposed)
         markup = self.markup
-        if self.smart_quotes_to and proposed.lower() in (
-            "windows-1252",
-            "iso-8859-1",
-            "iso-8859-2",
-        ):
-            markup = _MS_BYTE_RE.sub(self._sub_ms_char, markup)
+        if proposed.lower() in ("windows-1252", "iso-8859-1", "iso-8859-2"):
+            markup = _MS_BYTE_RE.sub(_sub_ms_char, markup)
         try:
             u = _strip_bom_and_decode(markup, proposed)
         except Exception:
@@ -218,14 +206,13 @@ class SourceDecoder:
         self.original_encoding = proposed
         return u
 
-    def _sub_ms_char(self, m):
-        sub = MS_CHARS.get(m.group(1))
-        if isinstance(sub, tuple):
-            if self.smart_quotes_to == "xml":
-                sub = "&#x%s;" % sub[1]
-            else:
-                sub = "&%s;" % sub[0]
-        return sub.encode("ascii")
+
+def _sub_ms_char(m) -> bytes:
+    # smartQuotesTo='html', the HTML soup's setting
+    sub = MS_CHARS.get(m.group(1))
+    if isinstance(sub, tuple):
+        sub = "&%s;" % sub[0]
+    return sub.encode("ascii")
 
 
 def _strip_bom_and_decode(data: bytes, encoding: str) -> str:

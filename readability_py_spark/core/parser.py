@@ -158,6 +158,22 @@ def _convert_attr_entity(m: re.Match) -> str:
     return "&%s;" % x
 
 
+def make_tag(name: str, attrs=()) -> Element:
+    """Tag constructor (readability.py:1775-1802), for parsed and
+    pipeline-built tags alike: converts numeric entities in attr
+    values and flags self-closing names."""
+    converted = [
+        (
+            k,
+            _attr_entity_re.sub(_convert_attr_entity, v)
+            if isinstance(v, str) and "&" in v
+            else v,
+        )
+        for k, v in attrs
+    ]
+    return Element(name, converted, self_closing=name in SELF_CLOSING_TAGS)
+
+
 def _convert_ref_in_attr_value(m: re.Match) -> str:
     # sgmllib's attr-value substitution (sgmllib parse_starttag +
     # SGMLParser._convert_ref): named via entitydefs, numeric only for
@@ -179,8 +195,7 @@ class SoupParser:
     the meta-charset restart loop (readability.py:2382-2390,
     2816-2861)."""
 
-    def __init__(self, markup: bytes | str, from_encoding: str | None = None):
-        self.from_encoding = from_encoding
+    def __init__(self, markup: bytes | str):
         self.original_markup = markup
         self.root: Element | None = None
         self.original_encoding: str | None = None
@@ -201,12 +216,7 @@ class SoupParser:
             if isinstance(markup, str):
                 self.original_encoding = None
             else:
-                dammit = SourceDecoder(
-                    markup,
-                    [self.from_encoding, in_document_encoding],
-                    smart_quotes_to="html",
-                    is_html=True,
-                )
+                dammit = SourceDecoder(markup, [in_document_encoding])
                 markup = dammit.unicode
                 self.original_encoding = dammit.original_encoding
                 self.declared_html_encoding = dammit.declared_html_encoding
@@ -320,16 +330,6 @@ class SoupParser:
             self._pop_to_tag(pop_to, inclusive)
 
     # -- tag events ----------------------------------------------------
-    def _is_self_closing(self, name: str) -> bool:
-        return name in SELF_CLOSING_TAGS
-
-    def _make_element(self, name: str, attrs) -> Element:
-        converted = [
-            (k, _attr_entity_re.sub(_convert_attr_entity, v) if "&" in v else v)
-            for k, v in attrs
-        ]
-        return Element(name, converted, self_closing=self._is_self_closing(name))
-
     def _unknown_starttag(self, name, attrs, self_closing=0):
         if self.quote_stack:
             # not a real tag inside script/textarea; reconstruct
@@ -338,12 +338,11 @@ class SoupParser:
             self._handle_data("<%s%s>" % (name, attr_text))
             return None
         self._end_data()
-        if not self._is_self_closing(name) and not self_closing:
+        if name not in SELF_CLOSING_TAGS and not self_closing:
             self._smart_pop(name)
-        tag = self._make_element(name, attrs)
-        tag.parent = None
+        tag = make_tag(name, attrs)
         self._push_tag(tag)
-        if self_closing or self._is_self_closing(name):
+        if self_closing or name in SELF_CLOSING_TAGS:
             self._pop_tag()
         if name in QUOTE_TAGS:
             self.quote_stack.append(name)
@@ -379,7 +378,7 @@ class SoupParser:
             if match:
                 if (
                     self.declared_html_encoding is not None
-                    or self.original_encoding == self.from_encoding
+                    or self.original_encoding is None
                 ):
                     new_attr = CHARSET_RE.sub(
                         lambda m: m.group(1) + "%SOUP-ENCODING%", content_type
@@ -780,8 +779,3 @@ class SoupParser:
                 return None, -1
             return name.lower(), m.end()
         self._decl_error("expected name token")
-
-
-def parse_html(markup: bytes | str) -> Element:
-    """Parse a document and return the root element."""
-    return SoupParser(markup).root

@@ -360,8 +360,8 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning (the un-cached form put the probe side of the
     broadcast join directly on the single-split scan: the entire
     multi-million-pair generation + distinct partial aggregation ran
-    in ONE task — 27.1 s of this query's 29 s at sf1.0, bench_extra
-    ``near_dup_cand``)."""
+    in ONE task — 27.1 s of this query's 29 s at sf1.0,
+    OPTIMIZATION_r07.md)."""
     from .dedup import _persist
 
     n = _normed(spark, sf_dir)

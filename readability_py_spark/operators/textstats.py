@@ -377,8 +377,8 @@ def gram_array(words: F.Column, n: int) -> F.Column:
     nodes per gram instead of the previous ``concat_ws`` of n separate
     ``element_at`` calls (higher-order lambdas evaluate interpreted, so
     per-gram node count is the unit of cost; measured 12.4 s → 4 s on
-    the 13-gram decontamination build at sf1.0, bench_extra
-    ``decon_gram_build``). Output is byte-identical: ``split`` never
+    the 13-gram decontamination build at sf1.0, OPTIMIZATION_r07.md).
+    Output is byte-identical: ``split`` never
     yields nulls and the ``size >= n`` guard makes every slice full
     width, so join-with-space == concat_ws-with-space."""
     return F.when(

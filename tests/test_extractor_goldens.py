@@ -85,3 +85,27 @@ def test_hot_path_call_matches_render_extras_call():
 def test_corpus_covers_all_families():
     families = {c["family"] for c in CASES}
     assert len(families) >= 15, families
+
+
+def test_clean_conditionally_setting_is_unread():
+    """The retry cascade's last step drops clean_conditionally and keeps
+    the pass it has instead of starting over; that is only sound while
+    no code reads the setting. Extracting with it off must give every
+    output of the default call, over the goldens and the mixed pages.
+    Only the retry count may differ: the default call counts the
+    dropped setting as one more retry."""
+    from perfbench.corpus import mixed_rows
+    from readability_py_spark.core.arc90 import extract_document
+
+    pages = [
+        (base64.b64decode(c["html_b64"]), c["url"], c["settings"]) for c in CASES
+    ] + [(r["html"], r["url"], {}) for r in mixed_rows(1200, seed=1) if r["lang"]]
+    assert len(pages) >= 1165 + len(CASES)
+    for html, url, settings in pages:
+        default = extract_document(html, url=url, **settings)
+        off = extract_document(html, url=url, **settings, clean_conditionally=False)
+        for res in (default, off):
+            res["metrics"] = dict(res["metrics"])
+        retries = default["metrics"].pop("retries"), off["metrics"].pop("retries")
+        assert default == off, url
+        assert retries[0] - retries[1] == (retries[0] == 3), url

@@ -59,3 +59,16 @@ def test_oversize_generator_deterministic():
     big = generate_page_row(4000, oversize_every=2000)
     assert len(big["html"]) >= 1_000_000
     assert big["url"] == generate_page_row(4000)["url"]
+
+
+def test_every_tool_is_named_in_a_test_or_doc():
+    """A script under tools/ that no test, README.md, CLAUDE.md or the
+    verify skill names has no reader who knows to run it."""
+    docs = [os.path.join(REPO, "README.md"), os.path.join(REPO, "CLAUDE.md"),
+            os.path.join(REPO, ".claude", "skills", "verify", "SKILL.md")]
+    tests = os.path.join(REPO, "tests")
+    docs += [os.path.join(tests, f) for f in os.listdir(tests) if f.endswith(".py")]
+    text = "".join(open(p).read() for p in docs if os.path.exists(p))
+    tools = sorted(f for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py"))
+    orphans = [f for f in tools if f not in text]
+    assert not orphans, orphans

@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Run EVERY oracle pair (full surface, include_retired=True) against
+"""Run the oracle pairs (full surface, include_retired=True) against
 DuckDB at an arbitrary SF dir — the assurance sweep for SF-dependent
 divergence (the IEEE -0.0 class only ever appeared at sf0.01+; this
 runs the whole surface at sf0.1, which no routine harness covers).
+Naming pairs runs only those: the quick check after changing a few
+queries.
 
-Usage: python tools/oracle_sweep.py [SF_DIR]   (default sf0.1)
+Usage: python tools/oracle_sweep.py [SF_DIR [name ...]]   (default sf0.1, every pair)
 Prints one line per mismatching pair and a final tally; exit 1 on any
-mismatch.
+mismatch or on a name without an oracle pair.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    names = sys.argv[2:]
     from oracle_harness import compare  # tests/oracle_harness.py
 
     from readability_py_spark.operators import merged_queries
@@ -36,7 +39,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     q, o = merged_queries(include_retired=True)
     ok = bad = err = 0
-    for name in sorted(o):
+    for name in names or sorted(o):
+        if name not in o:
+            err += 1
+            print(f"ERR  {name}: no oracle pair", flush=True)
+            continue
         try:
             res = compare(q[name](spark, sf_dir), o[name], sf_dir)
         except Exception as e:  # noqa: BLE001 — report and continue
@@ -54,7 +61,7 @@ def main() -> None:
             print(f"FAIL {name}: {json.dumps(res)[:400]}", flush=True)
     print(
         f"oracle sweep @ {sf_dir}: {ok} match / {bad} mismatch / {err} error "
-        f"of {len(o)} pairs"
+        f"of {len(names or o)} pairs"
     )
     spark.stop()
     sys.exit(1 if (bad or err) else 0)
