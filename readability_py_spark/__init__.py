@@ -11,7 +11,7 @@ plan.
 Layout:
   core/        pure-Python3 byte-faithful extractor (no Spark imports)
   operators/   corpus-level relational + training-data operators
-  sources/     pages-table synthesizer, parquet/iceberg IO, resume manifest
+  sources/     pages-table synthesizer, parquet/iceberg IO, snapshot catalog
   functions/   reusable Column expression helpers
   plans/       end-to-end job plans (extract job, metrics job)
   streaming/   structured-streaming scaffold (batch is the north rule)

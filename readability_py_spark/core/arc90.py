@@ -691,10 +691,14 @@ class Arc90Document:
                 b.extract()
         elif len(bodies) == 0:
             body = make_tag("body")
+            # an ancestor of <html> moved into the body would close a
+            # cycle once the body joins <html> (e.g. <div><html>...)
+            above = set(map(id, html_element.parents()))
             elements = [
                 t
                 for t in self._osoup.find_all(True)
                 if t.name not in ("html", "head", "title", "meta", "link")
+                and id(t) not in above
             ]
             for el in elements:
                 body.append(el)

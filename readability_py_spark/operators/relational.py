@@ -226,9 +226,10 @@ SELECT source, doc_id, n_chars, rnk FROM (
 # ---------------------------------------------------------------------------
 
 def q_resume_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resume = pages LEFT ANTI JOIN done-manifest. The done set here is
-    a deterministic subset (doc_id % 7 = 0) standing in for the
-    checkpoint manifest; broadcast it (small vs the corpus)."""
+    """Resume = pages LEFT ANTI JOIN done set. The done set here is a
+    deterministic subset (doc_id % 7 = 0) standing in for the urls
+    already committed to the output; broadcast it (small vs the
+    corpus)."""
     docs = load_table(spark, sf_dir, "documents")
     done = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
     return (

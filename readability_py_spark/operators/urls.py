@@ -1,6 +1,6 @@
 """URL canonicalization — the crawl-side normalization every dedup and
 resume key depends on (a url is THE identity key of the extraction
-pipeline: dedup-latest, the done-manifest anti-join, and bucketing all
+pipeline: dedup-latest, the resume anti-join, and bucketing all
 hash it, so two spellings of one page must collapse BEFORE any of
 them run).
 

@@ -1,11 +1,12 @@
 """Flagship extraction job plan (SURVEY.md §3.4).
 
 Logical plan:
-  scan(pages) → filter(lang/nonempty) → left-anti join(done-manifest,
-  broadcast) → dedup-latest(url, warc_ts) over a SINGLE hash(url)
-  exchange (partition-local window, see extraction_plan) →
-  mapInPandas(extract_batch, Arrow) → sink(parquet) + done-manifest
-  append + per-partition metrics.
+  scan(pages) → filter(lang/nonempty) → left-anti join(urls already
+  committed to ``extracted``, broadcast) → dedup-latest(url, warc_ts)
+  over a SINGLE hash(url) exchange (partition-local window, see
+  extraction_plan) → mapInPandas(extract_batch, Arrow) →
+  observe(row, parse-error and partition counts) → sink(parquet
+  snapshot). A pass is that one write; nothing reads it back.
 
 Scale design notes (100 TB / 1000 executors):
 - the only Python crossing is the single mapInPandas stage; everything
@@ -18,21 +19,21 @@ Scale design notes (100 TB / 1000 executors):
   task pays a fixed worker setup, so tasks beyond one per core repeat
   that cost without buying balance the url-hashed split lacks (see
   extraction_plan).
-- the done-manifest is a url list, small relative to the corpus →
-  broadcast anti-join; at 10^12 rows it becomes a bucketed sort-merge
-  anti-join (AQE picks this automatically once it exceeds the
-  broadcast threshold).
-- resumability is data-level: output + manifest are written per run;
-  a rerun anti-joins the manifest and only extracts the remainder.
+- the resume set is the url column of the committed output, small
+  relative to the corpus → broadcast anti-join; at 10^12 rows it
+  becomes a bucketed sort-merge anti-join (AQE picks this
+  automatically once it exceeds the broadcast threshold).
+- resumability is data-level: the catalog's commit log is the only
+  record of done work, so a rerun anti-joins what committed and only
+  extracts the remainder.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -220,55 +221,44 @@ def run_extract_job(
     out_dir: str,
     num_partitions: int | None = None,
 ) -> dict:
-    """Resumable run: anti-join the done manifest, extract, append a
-    snapshot (with lineage) + manifest, return per-run metrics.
+    """Resumable run: anti-join the urls already committed to the
+    ``extracted`` table, extract the rest, and append them as one
+    snapshot (with lineage). The pass is that one write: the run's
+    counts are observed on it, never read back from its files.
 
-    A killed run resumes per-partition: urls whose output committed are
-    in the manifest and are anti-joined away; the remainder re-extracts
-    (idempotent — extraction is deterministic per url)."""
+    A killed run resumes from the committed output alone: urls in a
+    committed snapshot (compaction baselines included) are anti-joined
+    away, and the remainder re-extracts (idempotent — extraction is
+    deterministic per url). A crash before the commit leaves an orphan
+    dir that neither reads nor the resume set see."""
     from ..sources.catalog import LocalTableCatalog
 
     catalog = LocalTableCatalog(out_dir)
-    done = None
-    if catalog.exists("done_manifest"):
-        done = catalog.read(spark, "done_manifest")
-    extracted = extraction_plan(pages, done_urls=done, num_partitions=num_partitions)
+    resumed = catalog.exists("extracted")
+    done = catalog.read(spark, "extracted") if resumed else None
+    obs = Observation()
+    extracted = extraction_plan(
+        pages, done_urls=done, num_partitions=num_partitions
+    ).observe(
+        obs,
+        F.count_if(~F.col("metrics.parse_ok")).alias("parse_errors"),
+        F.size(F.collect_set("part_id")).alias("partitions"),
+    )
     snap = catalog.append(
         extracted,
         "extracted",
         lineage={
             "job": "extract",
-            "resumed": done is not None,
+            "resumed": resumed,
             "num_partitions": num_partitions,
         },
     )
-    # THIS run's rows only (incremental snapshot read, never a full
-    # table scan — at 10^12 rows the full reread round 1 did here is
-    # an O(table) cost per checkpoint commit). The urls are new and
-    # unique by construction: extraction_plan anti-joined the manifest
-    # and kept one row per url, so no distinct() (a shuffle) is needed.
-    this_run = catalog.read_snapshot(spark, "extracted", snap["snapshot_id"])
-    new_done = this_run.select("url")
-    catalog.append(new_done, "done_manifest", lineage={"for_snapshot": snap["snapshot_id"]})
-    stats = (
-        this_run.groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.avg("metrics.top_score").alias("avg_top_score"),
-            F.avg("metrics.link_density").alias("avg_link_density"),
-            F.sum("metrics.retries").alias("retries"),
-            F.sum(F.when(~F.col("metrics.parse_ok"), 1).otherwise(0)).alias(
-                "parse_errors"
-            ),
-        )
-        .collect()
-    )
+    counts = obs.get
     return {
-        "partitions": len(stats),
-        "docs": sum(r["docs"] for r in stats),
-        "parse_errors": sum(r["parse_errors"] for r in stats),
+        "partitions": counts["partitions"],
+        "docs": snap["added_rows"],
+        "parse_errors": counts["parse_errors"],
         "snapshot_id": snap["snapshot_id"],
-        "per_partition": [r.asDict() for r in stats],
     }
 
 

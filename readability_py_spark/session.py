@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
@@ -30,18 +31,20 @@ def build_session(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
-    ``master`` falls back to ``local[$SPARK_GRAFT_CPUS]`` (default 32)
-    so the same entrypoint works under the driver harness and under
-    spark-submit on a real cluster (where --master wins and this arg
-    is left None).
+    ``master`` left None keeps the master of a launcher that set one:
+    spark-submit starts the JVM before this process and hands it over
+    (``PYSPARK_GATEWAY_PORT``) with ``--master`` in its conf. Under
+    plain python there is none, and the master falls back to
+    ``local[$SPARK_GRAFT_CPUS]`` (default 32).
     """
-    if master is None:
+    if master is None and _launcher_master() is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config(
+        builder.config(
             "spark.sql.shuffle.partitions",
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS,
         )
@@ -66,6 +69,16 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _launcher_master() -> str | None:
+    """The master spark-submit was given for this process, or None when
+    no launcher started the JVM (pyspark then starts its own, whose
+    ``local[*]`` default nobody chose)."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import base64
 import json
 import os
+import shutil
 
 from .conftest import SF_SMOKE
 from .test_extractor_goldens import CASES
@@ -165,10 +166,10 @@ def test_catalog_orphan_snapshot_invisible(spark, tmp_path):
     assert len(snaps) == 1 and snaps[0]["total_rows"] == 10
 
 
-def test_done_manifest_rows_are_unique_urls(spark, tmp_path):
-    """The manifest takes each run's extracted urls as they are: the
-    plan keeps one row per url and anti-joins the manifest first, so
-    duplicate crawls and resumed runs still leave one row per url."""
+def test_extracted_rows_are_unique_urls(spark, tmp_path):
+    """A run extracts only urls no committed snapshot holds, one row
+    per url, so duplicate crawls and a resumed run still leave exactly
+    one row per url in ``extracted``."""
     from readability_py_spark.plans.bench_extract import build_pages_df
     from readability_py_spark.plans.extract_job import run_extract_job
     from readability_py_spark.sources.catalog import LocalTableCatalog
@@ -182,8 +183,122 @@ def test_done_manifest_rows_are_unique_urls(spark, tmp_path):
     run_extract_job(spark, pages.limit(40), out_dir)
     run_extract_job(spark, pages, out_dir)
 
-    catalog = LocalTableCatalog(out_dir)
-    manifest = catalog.read(spark, "done_manifest")
-    assert manifest.count() == distinct_urls
-    assert manifest.select("url").distinct().count() == distinct_urls
-    assert catalog.read(spark, "extracted").count() == distinct_urls
+    extracted = LocalTableCatalog(out_dir).read(spark, "extracted")
+    assert extracted.count() == distinct_urls
+    assert extracted.select("url").distinct().count() == distinct_urls
+
+
+def test_resume_from_committed_output_alone(spark, tmp_path):
+    """The committed ``extracted`` snapshots are the whole resume
+    state: with everything else in the job directory gone (what a
+    crash right after the commit leaves), a rerun extracts nothing."""
+    from readability_py_spark.plans.bench_extract import build_pages_df
+    from readability_py_spark.plans.extract_job import run_extract_job
+    from readability_py_spark.sources.catalog import LocalTableCatalog
+
+    out_dir = tmp_path / "job"
+    pages = build_pages_df(spark, 60)
+    r1 = run_extract_job(spark, pages, str(out_dir))
+    for entry in out_dir.iterdir():
+        if entry.name != "extracted":
+            shutil.rmtree(entry) if entry.is_dir() else entry.unlink()
+
+    r2 = run_extract_job(spark, pages, str(out_dir))
+    assert r1["docs"] > 0
+    assert r2["docs"] == 0 and r2["partitions"] == 0
+    urls = [r["url"] for r in LocalTableCatalog(str(out_dir)).read(spark, "extracted").collect()]
+    assert len(urls) == len(set(urls)) == r1["docs"]
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    """Spark jobs ``action`` submits, counted in a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_extract_pass_is_one_write(spark, tmp_path):
+    """A fresh run_extract_job pass submits exactly the jobs of a bare
+    write of its extraction plan: no read-back, no second table, no
+    stats job."""
+    from readability_py_spark.plans.bench_extract import build_pages_df
+    from readability_py_spark.plans.extract_job import (
+        extraction_plan,
+        run_extract_job,
+    )
+
+    pages = build_pages_df(spark, 200).persist()
+    try:
+        pages.count()
+        bare = _jobs_in_group(
+            spark, "bare-write",
+            lambda: extraction_plan(pages).write.parquet(str(tmp_path / "bare")),
+        )
+        run = _jobs_in_group(
+            spark, "extract-pass",
+            lambda: run_extract_job(spark, pages, str(tmp_path / "job")),
+        )
+    finally:
+        pages.unpersist()
+    assert run == bare
+
+
+def _footer_rows(catalog, table: str, snap_id: str) -> int:
+    """Rows of one snapshot by its parquet footers."""
+    import pyarrow.parquet as pq
+
+    sdir = catalog._snap_dir(table, snap_id)
+    return sum(
+        pq.ParquetFile(os.path.join(sdir, f)).metadata.num_rows
+        for f in os.listdir(sdir)
+        if f.endswith(".parquet")
+    )
+
+
+def test_commit_counts_equal_parquet_footers(spark, tmp_path):
+    """append's added_rows / total_rows and compact's total_rows, both
+    observed on the write, equal the rows the snapshot's files hold."""
+    from pyspark.sql import functions as F
+
+    from readability_py_spark.sources.catalog import LocalTableCatalog
+
+    cat = LocalTableCatalog(str(tmp_path))
+    total = 0
+    for n in (17, 0, 40):
+        df = spark.range(n).filter(F.col("id") % 3 != 0).repartition(3)
+        rec = cat.append(df, "t")
+        added = _footer_rows(cat, "t", rec["snapshot_id"])
+        total += added
+        assert rec["added_rows"] == added
+        assert rec["total_rows"] == total
+    assert total == 11 + 0 + 26
+    rec = cat.compact(spark, "t")
+    assert rec["total_rows"] == _footer_rows(cat, "t", rec["snapshot_id"]) == total
+
+
+def test_html_inside_another_element_parses():
+    """Pages whose <html> sits inside another element and which have no
+    <body> extract: the <body> made for them must not take an ancestor
+    of that <html> (which made the tree cyclic)."""
+    import pandas as pd
+
+    from readability_py_spark.plans.extract_job import extract_batch
+
+    para = "<p>" + "Words, words, and more words to score. " * 10 + "</p>"
+    pages = [
+        "<div><html><head><title>T</title></head>" + para + "</html></div>",
+        "<table><tr><td><html>" + para + "</html></td></tr></table>",
+        "<style><html>",
+    ]
+    batch = pd.DataFrame(
+        {"url": [f"http://x.example.com/{i}" for i in range(3)],
+         "html": [p.encode() for p in pages]}
+    )
+    (out,) = extract_batch(iter([batch]))
+    assert [m["parse_ok"] for m in out["metrics"]] == [True, True, True]
+    assert out["title"][0] == "T"
+    assert out["article_text"][0].startswith("Words, words")

@@ -258,10 +258,12 @@ class _SequentialPrepare(Arc90Document):
                 b.extract()
         elif len(bodies) == 0:
             body = make_tag("body")
+            above = set(map(id, html_element.parents()))
             elements = [
                 t
                 for t in self._osoup.find_all(True)
                 if t.name not in ("html", "head", "title", "meta", "link")
+                and id(t) not in above
             ]
             for el in elements:
                 body.append(el)
@@ -349,3 +351,27 @@ page_part = st.sampled_from(
 def test_prepare_document_matches_sequential_on_random_pages(parts):
     _assert_prepare_matches_oracle("".join(parts))
 
+
+
+def _own_ancestor(node) -> bool:
+    """Whether walking up from ``node`` comes back to a node already
+    passed, ``node`` itself included: a cycle at or above it."""
+    seen = {id(node)}
+    for p in node.parents():
+        if id(p) in seen:
+            return True
+        seen.add(id(p))
+    return False
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(page_part, max_size=30))
+def test_prepare_document_leaves_no_cycle(parts):
+    """No node is its own ancestor after ``_prepare_document``, on
+    pages whose <html> sits inside another element too (the new <body>
+    must not take an ancestor of the <html> it joins)."""
+    doc = Arc90Document("".join(parts))
+    nodes = [doc._osoup, *doc._osoup.find_all(True)]
+    doc._prepare_document()
+    nodes += doc._osoup.find_all(True)
+    assert not any(_own_ancestor(n) for n in nodes)
