@@ -1,12 +1,16 @@
 """DOM tree for the byte-faithful extraction core.
 
-Semantics match the tree the reference builds (vendored BeautifulSoup
-3.2 in /root/reference/readability.py:1353-2275), but the design is
+Semantics match the tree the reference builds (its vendored
+BeautifulSoup 3.2, readability.py:1353-2275), but the design is
 deliberately simpler: nodes hold only ``parent`` + ``contents`` and
 sibling links are *derived* from position, which is observationally
-equivalent for every operation the extraction pipeline performs (the
-reference's `next`/`previous` document chains are only consumed via
-full-materialization traversals).
+equivalent for every operation the extraction pipeline performs.
+
+The API is what core/arc90.py calls: ``find`` / ``find_all`` in the
+argument shapes it passes, ``nextSibling``, ``parents()``, the
+``string`` setter, the mutations and rendering. BS3's directional
+finds, ``next``/``previous`` chains, ``previousSibling``,
+``SoupStrainer`` and ``prettify`` are left out: no output uses them.
 
 Behavioral quirks reproduced on purpose (each cited):
 - duplicate attributes keep order; the attr *map* lets the last dup win
@@ -42,96 +46,7 @@ def _escape_text(s: str) -> str:
     return _BARE_AMP_OR_BRACKET.sub(lambda m: _ESCAPES[m.group(0)[0]], s)
 
 
-class _DirectionalFinds:
-    """Directional search API shared by text nodes and tags —
-    findNext/findPrevious/findNextSibling/… (readability.py:1507-1579).
-
-    The reference walks its incrementally-maintained ``next``/
-    ``previous`` parse chains; here document order is *derived* from
-    parent+contents on each call (same convention as the rest of this
-    tree), which is observationally equivalent for every structurally
-    consistent tree. Generators start one step away from self, exactly
-    like the reference's nextGenerator/previousGenerator
-    (readability.py:1626-1654)."""
-
-    __slots__ = ()  # keep Element instances dict-free (hot path)
-
-    # -- document-order neighbours (derived next/previous chain) ----
-    @property
-    def next(self):
-        return _doc_next(self)
-
-    @property
-    def previous(self):
-        return _doc_previous(self)
-
-    def _walk(self, step):
-        node = step(self)
-        while node is not None:
-            yield node
-            node = step(node)
-
-    def _find_along(self, gen, name, attrs, text, limit):
-        results = []
-        for node in gen:
-            if _node_matches(node, name, attrs, text):
-                results.append(node)
-                if limit and len(results) >= limit:
-                    break
-        return results
-
-    def find_all_next(self, name=None, attrs=None, text=None, limit=None):
-        return self._find_along(self._walk(_doc_next), name, attrs, text, limit)
-
-    def find_next(self, name=None, attrs=None, text=None):
-        r = self.find_all_next(name, attrs, text, limit=1)
-        return r[0] if r else None
-
-    def find_next_siblings(self, name=None, attrs=None, text=None, limit=None):
-        return self._find_along(self._walk(_next_sibling), name, attrs, text, limit)
-
-    def find_next_sibling(self, name=None, attrs=None, text=None):
-        r = self.find_next_siblings(name, attrs, text, limit=1)
-        return r[0] if r else None
-
-    def find_all_previous(self, name=None, attrs=None, text=None, limit=None):
-        return self._find_along(self._walk(_doc_previous), name, attrs, text, limit)
-
-    def find_previous(self, name=None, attrs=None, text=None):
-        r = self.find_all_previous(name, attrs, text, limit=1)
-        return r[0] if r else None
-
-    def find_previous_siblings(self, name=None, attrs=None, text=None, limit=None):
-        return self._find_along(self._walk(_prev_sibling), name, attrs, text, limit)
-
-    def find_previous_sibling(self, name=None, attrs=None, text=None):
-        r = self.find_previous_siblings(name, attrs, text, limit=1)
-        return r[0] if r else None
-
-    def find_parents(self, name=None, attrs=None, limit=None):
-        return self._find_along(
-            self._walk(lambda n: getattr(n, "parent", None)),
-            name, attrs, None, limit,
-        )
-
-    def find_parent(self, name=None, attrs=None):
-        r = self.find_parents(name, attrs, limit=1)
-        return r[0] if r else None
-
-    # camelCase aliases (the reference's public spelling)
-    findNext = find_next
-    findAllNext = find_all_next
-    findNextSibling = find_next_sibling
-    findNextSiblings = find_next_siblings
-    findPrevious = find_previous
-    findAllPrevious = find_all_previous
-    findPreviousSibling = find_previous_sibling
-    findPreviousSiblings = find_previous_siblings
-    findParent = find_parent
-    findParents = find_parents
-
-
-class TextNode(str, _DirectionalFinds):
+class TextNode(str):
     """A text node; a str with tree links (NavigableString analogue)."""
 
     parent: "Element | None"
@@ -145,10 +60,6 @@ class TextNode(str, _DirectionalFinds):
     @property
     def nextSibling(self):
         return _next_sibling(self)
-
-    @property
-    def previousSibling(self):
-        return _prev_sibling(self)
 
     def extract(self):
         _detach(self)
@@ -196,7 +107,7 @@ def mutation_epoch() -> int:
     return _EPOCH[0]
 
 
-class Element(_DirectionalFinds):
+class Element:
     """A tag node (Tag analogue)."""
 
     __slots__ = (
@@ -304,10 +215,6 @@ class Element(_DirectionalFinds):
     def nextSibling(self):
         return _next_sibling(self)
 
-    @property
-    def previousSibling(self):
-        return _prev_sibling(self)
-
     def index_of(self, child) -> int:
         for i, c in enumerate(self.contents):
             if c is child:
@@ -365,7 +272,7 @@ class Element(_DirectionalFinds):
     # per open element: a text node costs one step of a for-loop, not
     # a push and a pop, and no recursion limits the depth.
     def find_all(self, name=None, attrs=None, recursive=True, text=None, limit=None):
-        """Match semantics of findAll/SoupStrainer
+        """Match semantics of findAll
         (readability.py:2075-2089, 2129-2247) for the argument shapes
         the pipeline uses: tag-name str, list of names, dict of names,
         True, callables, and attrs dicts with str/bool values.
@@ -437,8 +344,8 @@ class Element(_DirectionalFinds):
         Fast path: a str name or a list/tuple/set/frozenset of names,
         with ``attrs`` None or a dict of str values, walks preorder and
         returns at the first node whose name, then attrs, match. Every
-        other shape (dict-as-name, True, callables, regexes, strainers,
-        ``text=``, ``recursive=False``) goes through ``find_all``."""
+        other shape (dict-as-name, True, callables, regexes, ``text=``,
+        ``recursive=False``) goes through ``find_all``."""
         if (
             recursive
             and text is None
@@ -550,10 +457,6 @@ class Element(_DirectionalFinds):
                 parts.append(c.render(True, indent_level))
         return "".join(parts)
 
-    def prettify(self) -> str:
-        """Tag.prettify (readability.py:2038-2039)."""
-        return self.render(True)
-
     def __repr__(self):
         return self.render()
 
@@ -579,42 +482,6 @@ def clone_tree(node, parent=None):
     return copy
 
 
-def _last_recursive_child(node):
-    """readability.py:1436-1441."""
-    last = node
-    while isinstance(last, Element) and last.contents:
-        last = last.contents[-1]
-    return last
-
-
-def _doc_next(node):
-    """Document-order successor (the reference's ``next`` chain)."""
-    if isinstance(node, Element) and node.contents:
-        return node.contents[0]
-    while node is not None:
-        ns = _next_sibling(node)
-        if ns is not None:
-            return ns
-        node = getattr(node, "parent", None)
-    return None
-
-
-def _doc_previous(node):
-    """Document-order predecessor (the reference's ``previous`` chain).
-
-    The hidden soup root never entered the parse chain, so the chain
-    ends at the first real element (BS3's html.previous is None even
-    though html.parent is the soup) — while parentGenerator DOES yield
-    the root."""
-    ps = _prev_sibling(node)
-    if ps is not None:
-        return _last_recursive_child(ps)
-    p = getattr(node, "parent", None)
-    if p is not None and p.hidden:
-        return None
-    return p
-
-
 def _detach(node) -> None:
     _EPOCH[0] += 1
     p = getattr(node, "parent", None)
@@ -638,59 +505,13 @@ def _replace(node, replacement) -> None:
     old_parent.insert(my_index, replacement)
 
 
-def _siblings(node):
-    p = getattr(node, "parent", None)
-    if p is None:
-        return None, -1
-    for i, c in enumerate(p.contents):
-        if c is node:
-            return p, i
-    return None, -1
-
-
 def _next_sibling(node):
-    p, i = _siblings(node)
-    if p is not None and i + 1 < len(p.contents):
-        return p.contents[i + 1]
+    p = getattr(node, "parent", None)
+    if p is not None:
+        for i, c in enumerate(p.contents):
+            if c is node:
+                return p.contents[i + 1] if i + 1 < len(p.contents) else None
     return None
-
-
-def _prev_sibling(node):
-    p, i = _siblings(node)
-    if p is not None and i > 0:
-        return p.contents[i - 1]
-    return None
-
-
-def match_css_class(name: str):
-    """Build a RE matching the given CSS class (readability.py:1347-1349)."""
-    return re.compile(r"(^|.*\s)%s($|\s)" % name)
-
-
-class SoupStrainer:
-    """Reusable match criteria object (readability.py:2129-2247) for
-    the argument shapes BS3 supports: tag name (str/list/regex/callable
-    /True), attrs dict (str/regex/list/callable/True values), a bare
-    attrs *string* meaning a CSS-class word match, kwargs folded into
-    attrs, and text matchers. Pass one as ``name`` to any find method."""
-
-    def __init__(self, name=None, attrs=None, text=None, **kwargs):
-        self.name = name
-        if isinstance(attrs, str):
-            kwargs["class"] = match_css_class(attrs)
-            attrs = None
-        if kwargs:
-            attrs = {**(attrs or {}), **kwargs}
-        self.attrs = attrs or {}
-        self.text = text
-
-    def __str__(self):
-        return self.text if self.text else "%s|%s" % (self.name, self.attrs)
-
-    def matches(self, node) -> bool:
-        return _node_matches(
-            node, self.name, self.attrs or None, self.text
-        )
 
 
 def _matches_value(markup, match_against):
@@ -710,10 +531,6 @@ def _matches_value(markup, match_against):
 
 
 def _node_matches(node, name, attrs, text):
-    if isinstance(name, SoupStrainer):
-        # a strainer passed as `name` carries all criteria itself
-        # (readability.py:1593-1595)
-        return name.matches(node)
     if text is not None:
         if not isinstance(node, TextNode):
             return False

@@ -14,6 +14,16 @@ DuckDB), so even the MinHash/SimHash pipelines are oracle-checkable.
 MinHash "hash family" h_i(s) = md5(i || ':' || s) compared as hex
 strings (lexicographic min == numeric min on fixed-width hex).
 
+One pipeline per family: ``_doc_tokens`` — the documents scan through
+``maybe_parallelize``, split into words — is the one source shape.
+The standalone capped queries run ``minhash_lsh_capped_from`` /
+``simhash_pairs_capped_from`` over it, and groups.q_dedup_groups runs
+the same two over its persisted copy. Candidates are verified by one
+step, ``minhash_lsh_dups_from`` (the capped tail calls it on the
+buckets under the cap), with one Jaccard expression, ``_jaccard``.
+The generated SimHash SQL reads temp views registered over those
+relations; it carries no repartition hint of its own.
+
 Scale notes (100 TB): exact dedup shuffles once on the fingerprint;
 MinHash shuffles shingles (explode factor ~#shingles × k, bounded by
 distinct-shingle cap) then joins on band signature, which is uniform by
@@ -25,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table, maybe_parallelize, parallelize_hint
+from ..session import load_table, maybe_parallelize
 
 MINHASH_K = 12
 MINHASH_BAND_SIZE = 3  # 4 bands of 3
@@ -39,10 +49,11 @@ MINHASH_K_PROD = 64
 MINHASH_BAND_SIZE_PROD = 4  # 16 bands of 4
 LSH_BUCKET_CAP = 10
 
-# Cache registry (advisor round 2): queries persist intermediate
-# relations (shingle sets, signatures) that both sides of a self-join
-# reuse; long-lived sessions running many queries back-to-back (bench,
-# driver) should release them once the result is materialized.
+# The one cache registry: queries persist intermediate relations
+# (shingle sets, signatures) that both sides of a self-join reuse, and
+# sources.pages_io caches its parsed JSONL scan; long-lived sessions
+# running many queries back-to-back (bench, driver) release them all
+# with release_caches() once the result is materialized.
 _PERSISTED: list[DataFrame] = []
 
 
@@ -70,7 +81,7 @@ def _persist(df: DataFrame, eager: bool = False) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Unpersist every DataFrame cached by dedup queries (call after
+    """Unpersist every DataFrame cached through ``_persist`` (call after
     materializing a query's result; safe to call repeatedly)."""
     while _PERSISTED:
         _PERSISTED.pop().unpersist(blocking=False)
@@ -102,8 +113,10 @@ def shingles_of(text_col) -> F.Column:
     return shingles_from_tokens(F.split(text_col, " "))
 
 
-def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + distinct bigram word-shingle set.
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, toks): the documents scan split into words, the one
+    source shape of both LSH families (MinHash shingles the tokens,
+    SimHash hashes them).
 
     The scan goes through maybe_parallelize: the testdata tables are
     single parquet files (one input split), and shingle+minhash work is
@@ -113,9 +126,23 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     "What's wrong" #1: the unconditional form round-robin-shuffled 1×
     the corpus text for nothing)."""
     docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
-    return docs.select(
-        "doc_id", "lang", "n_chars", shingles_of(F.col("text")).alias("sh")
+    return docs.select("doc_id", F.split("text", " ").alias("toks"))
+
+
+def _shingle_sets(toks: DataFrame) -> DataFrame:
+    """(doc_id, sh): the bigram shingle set of each token array."""
+    return toks.select(
+        "doc_id", shingles_from_tokens(F.col("toks")).alias("sh")
     )
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of the ``sh`` sets of the relations aliased ``a``
+    and ``b``, unrounded: each caller rounds and filters in the order
+    its oracle fixes."""
+    inter = F.size(F.array_intersect(F.col(f"{a}.sh"), F.col(f"{b}.sh")))
+    union = F.size(F.col(f"{a}.sh")) + F.size(F.col(f"{b}.sh")) - inter
+    return inter.cast("double") / union
 
 
 _SH_DUCK = """
@@ -261,14 +288,18 @@ def q_minhash_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_operators_r4.py): identical shingle sets ⇒ identical
     signatures, and the full LSH dedup pipeline over either family
     verifies to the same near-dup pair set at test SF."""
-    return _band_signatures(_shingled(spark, sf_dir), family="xxhash64")
+    return _band_signatures(
+        _shingle_sets(_doc_tokens(spark, sf_dir)), family="xxhash64"
+    )
 
 
 def minhash_lsh_dups_from(sig: DataFrame, sh: DataFrame) -> DataFrame:
     """LSH dedup given a signature relation and a shingle relation:
     band equi-join candidates → exact-Jaccard verify. Split out so the
     md5 and xxhash64 signature families run the identical downstream
-    pipeline (used by q_minhash_lsh_dups and the fast-path tests)."""
+    pipeline (used by q_minhash_lsh_dups and the fast-path tests), and
+    so the capped tail runs it over the signatures at or under the
+    bucket cap."""
     a = sig.alias("a")
     b = sig.alias("b")
     cand = (
@@ -285,13 +316,12 @@ def minhash_lsh_dups_from(sig: DataFrame, sh: DataFrame) -> DataFrame:
     )
     da = sh.alias("da")
     db = sh.alias("db")
-    inter = F.size(F.array_intersect(F.col("da.sh"), F.col("db.sh")))
-    union = F.size(F.col("da.sh")) + F.size(F.col("db.sh")) - inter
-    jacc = inter.cast("double") / union
     return (
         cand.join(da, cand.a_id == F.col("da.doc_id"))
         .join(db, cand.b_id == F.col("db.doc_id"))
-        .select("a_id", "b_id", F.round(jacc, 4).alias("jaccard"))
+        .select(
+            "a_id", "b_id", F.round(_jaccard("da", "db"), 4).alias("jaccard")
+        )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
@@ -304,9 +334,9 @@ def q_minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     The signature and shingle-set relations are cached: both sides of
     the candidate self-join and the verify join reuse them (at corpus
     scale these would be persisted index tables, not recomputed)."""
-    d_full = _persist(_shingled(spark, sf_dir), eager=True)
-    sig = _persist(_band_signatures(d_full), eager=True)
-    return minhash_lsh_dups_from(sig, d_full.select("doc_id", "sh"))
+    d = _persist(_shingle_sets(_doc_tokens(spark, sf_dir)), eager=True)
+    sig = _persist(_band_signatures(d), eager=True)
+    return minhash_lsh_dups_from(sig, d)
 
 
 ORACLE_MINHASH_LSH_DUPS = f"""
@@ -330,6 +360,12 @@ SELECT a_id, b_id, jaccard FROM verified WHERE jaccard >= {JACCARD_THRESHOLD}
 
 
 def q_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return minhash_lsh_capped_from(spark, sf_dir, _doc_tokens(spark, sf_dir))
+
+
+def minhash_lsh_capped_from(
+    spark: SparkSession, sf_dir: str, toks: DataFrame
+) -> DataFrame:
     """Production-parameter MinHash-LSH dedup with a bucket-size cap —
     the 100 TB path (VERDICT item 4).
 
@@ -348,31 +384,13 @@ def q_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output matches minhash_lsh_dups' shape: (a_id, b_id, jaccard);
     exact-channel pairs carry jaccard 1.0 (identical text ⇒ identical
-    shingle sets ⇒ true Jaccard 1.0, so the two channels agree)."""
-    d = _persist(_shingled(spark, sf_dir), eager=True)
-    sig = _band_signatures(
-        d, k=MINHASH_K_PROD, band_size=MINHASH_BAND_SIZE_PROD
-    )
-    return _capped_tail(
-        spark, sf_dir, d, sig, F.md5(F.encode(F.col("text"), "utf-8"))
-    )
+    shingle sets ⇒ true Jaccard 1.0, so the two channels agree).
 
-
-def minhash_lsh_capped_from(
-    spark: SparkSession, sf_dir: str, toks: DataFrame
-) -> DataFrame:
-    """q_minhash_lsh_capped's pipeline over a SHARED (doc_id, toks)
-    token relation (already persisted by the caller): the shingle
-    build starts from the cached token arrays instead of re-scanning +
-    re-splitting documents. Used by groups.q_dedup_groups, where the
-    SimHash branch reads the same token relation — one scan + split
-    feeds both pair families (VERDICT r5 item 5)."""
-    d = _persist(
-        toks.select(
-            "doc_id", shingles_from_tokens(F.col("toks")).alias("sh")
-        ),
-        eager=True,
-    )
+    ``toks`` is a (doc_id, toks) token relation: the standalone query
+    passes ``_doc_tokens``; groups.q_dedup_groups passes its persisted
+    one, which the SimHash branch reads too — one scan + split feeds
+    both pair families (VERDICT r5 item 5)."""
+    d = _persist(_shingle_sets(toks), eager=True)
     sig = _band_signatures(
         d, k=MINHASH_K_PROD, band_size=MINHASH_BAND_SIZE_PROD
     )
@@ -403,12 +421,11 @@ def q_minhash_lsh_capped_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by pytest equality of the emitted pair set against the
     driver-hash-green md5 pipeline at test SF
     (tests/test_operators_r5.py)."""
-    docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
     d = _persist(
-        docs.select(
+        _doc_tokens(spark, sf_dir).select(
             "doc_id",
             F.transform(
-                shingles_of(F.col("text")), lambda s: F.xxhash64(s)
+                shingles_from_tokens(F.col("toks")), lambda s: F.xxhash64(s)
             ).alias("sh"),
         ),
         eager=True,
@@ -430,9 +447,10 @@ def _capped_tail(
     fp_col: Column,
 ) -> DataFrame:
     """Shared tail of the capped LSH pipelines: window bucket-count,
-    cap split, candidate self-join, Jaccard verify, hot-bucket exact
-    channel. ``d`` is the (doc_id, sh) relation (string or hashed
-    shingles), ``fp_col`` the exact-channel text fingerprint."""
+    cap split, minhash_lsh_dups_from over the buckets at or under the
+    cap, hot-bucket exact channel. ``d`` is the (doc_id, sh) relation
+    (string or hashed shingles), ``fp_col`` the exact-channel text
+    fingerprint."""
     # Bucket size via a window count, not groupBy + join-back: one hash
     # shuffle on the band key gives every signature row its bucket size
     # directly, where the join formulation cost two extra shuffles (the
@@ -449,29 +467,8 @@ def _capped_tail(
         ),
         eager=True,
     )
-    small = sig_c.filter(F.col("c") <= LSH_BUCKET_CAP)
-    a = small.alias("a")
-    b = small.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sh = d.select("doc_id", "sh")
-    da, db = sh.alias("da"), sh.alias("db")
-    inter = F.size(F.array_intersect(F.col("da.sh"), F.col("db.sh")))
-    union = F.size(F.col("da.sh")) + F.size(F.col("db.sh")) - inter
-    jacc = inter.cast("double") / union
-    verified = (
-        cand.join(da, cand.a_id == F.col("da.doc_id"))
-        .join(db, cand.b_id == F.col("db.doc_id"))
-        .select("a_id", "b_id", F.round(jacc, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    verified = minhash_lsh_dups_from(
+        sig_c.filter(F.col("c") <= LSH_BUCKET_CAP), d
     )
     # hot buckets → exact-dup side channel (linear: pair with group min)
     hot_docs = (
@@ -538,12 +535,7 @@ SELECT DISTINCT a_id, b_id, jaccard FROM (
 """
 
 
-def _simhash_sql(
-    dialect: str,
-    hint: str = "",
-    source_table: str = "documents",
-    tokens_expr: str | None = None,
-) -> str:
+def _simhash_sql(dialect: str, source_table: str = "doc_tokens") -> str:
     """Generate the 32-bit SimHash query for either dialect.
 
     Signature = for each bit b: sign of Σ_tokens (±1 by bit b of
@@ -558,15 +550,14 @@ def _simhash_sql(
     at 100 TB nothing moves until the banded pair join. (Round 1
     exploded every distinct token into a shuffled groupBy over 32
     SUM(CASE) columns — one shuffled row per token occurrence.)
+
+    The Spark dialect reads the (doc_id, toks) view ``source_table``
+    (see ``_doc_tokens``); the DuckDB dialect splits documents.text.
     """
     if dialect == "spark":
-        # one md5 per distinct token, materialized as an in-row array;
-        # `tokens_expr` lets a caller substitute a pre-split cached
-        # token column (groups.q_dedup_groups' shared token relation)
-        # for the default in-place split
-        toks_src = tokens_expr or "split(text, ' ')"
+        # one md5 per distinct token, materialized as an in-row array
         hs = (
-            f"transform(array_distinct({toks_src}), "
+            "transform(array_distinct(toks), "
             "tok -> CAST(conv(substr(md5(tok), 1, 8), 16, 10) AS BIGINT))"
         )
         bit_sums = ",\n         ".join(
@@ -574,19 +565,7 @@ def _simhash_sql(
             f"(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1L ELSE -1L END)) AS s{b}"
             for b in range(SIMHASH_BITS)
         )
-        # `hint` is parallelize_hint(...)'s output: a REPARTITION hint
-        # only when the documents scan is split-starved (single parquet
-        # file at test SF), "" on a real multi-split input where the
-        # old hardcoded /*+ REPARTITION(32) */ would have COALESCED a
-        # many-split scan (VERDICT r4 "What's wrong" #1). The hint
-        # lives in an INNER subquery: a hint in the hash-build block
-        # repartitions that block's OUTPUT, so the per-token md5 build
-        # would compute below the exchange, serially on the
-        # single-split scan (the winnow serial-build bug, r6).
-        hashed = (
-            f"SELECT doc_id, {hs} AS hs "
-            f"FROM (SELECT {hint}* FROM {source_table})"
-        )
+        hashed = f"SELECT doc_id, {hs} AS hs FROM {source_table}"
     else:
         hs = (
             "list_transform(list_distinct(string_split(text, ' ')), "
@@ -613,18 +592,9 @@ SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM bits
 """
 
 
-def _docs_view_and_hint(spark: SparkSession, sf_dir: str) -> str:
-    """Register the documents temp view and return the conditional
-    REPARTITION hint for its scan (shared by the generated-SQL SimHash
-    queries)."""
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    return parallelize_hint(spark, docs)
-
-
 def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hint = _docs_view_and_hint(spark, sf_dir)
-    return spark.sql(_simhash_sql("spark", hint=hint))
+    _doc_tokens(spark, sf_dir).createOrReplaceTempView("doc_tokens")
+    return spark.sql(_simhash_sql("spark"))
 
 
 ORACLE_SIMHASH_DOCS = _simhash_sql("duckdb")
@@ -728,25 +698,22 @@ SELECT a_id, b_id, hamming FROM exact
 
 
 def q_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hint = _docs_view_and_hint(spark, sf_dir)
-    sig = _persist(spark.sql(_simhash_sql("spark", hint=hint)), eager=True)
-    sig.createOrReplaceTempView("simhash_sig_cached")
-    return spark.sql(_simhash_pairs_capped_sql("spark"))
+    # the plain scan: the exact channel fingerprints only the hot rows'
+    # text, and a round-robin exchange under it would shuffle the whole
+    # table for them
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    _doc_tokens(spark, sf_dir).createOrReplaceTempView("doc_tokens")
+    return simhash_pairs_capped_from(spark, "doc_tokens")
 
 
 def simhash_pairs_capped_from(spark: SparkSession, toks_view: str) -> DataFrame:
-    """q_simhash_pairs_capped's pipeline over a SHARED registered token
-    view (doc_id, toks — persisted by the caller): the signature build
-    hashes the cached token arrays instead of re-scanning + re-splitting
-    documents. The `documents` temp view must also be registered (the
-    hot-bucket exact channel fingerprints raw text). Used by
-    groups.q_dedup_groups (VERDICT r5 item 5)."""
-    sig = _persist(
-        spark.sql(
-            _simhash_sql("spark", source_table=toks_view, tokens_expr="toks")
-        ),
-        eager=True,
-    )
+    """q_simhash_pairs_capped's pipeline over a registered (doc_id,
+    toks) token view: the standalone query registers ``_doc_tokens``;
+    groups.q_dedup_groups registers its persisted one, which the
+    MinHash branch reads too (VERDICT r5 item 5). The `documents` temp
+    view must also be registered (the hot-bucket exact channel
+    fingerprints raw text)."""
+    sig = _persist(spark.sql(_simhash_sql("spark", toks_view)), eager=True)
     sig.createOrReplaceTempView("simhash_sig_cached")
     return spark.sql(_simhash_pairs_capped_sql("spark"))
 

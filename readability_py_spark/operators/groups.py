@@ -39,11 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import load_table, maybe_parallelize
 from .dedup import (
     JACCARD_THRESHOLD,
     ORACLE_MINHASH_LSH_CAPPED,
     ORACLE_SIMHASH_PAIRS_CAPPED,
     _band_signatures,
+    _doc_tokens,
     _duck_minhash_sig,
     _persist,
     minhash_lsh_capped_from,
@@ -134,9 +136,7 @@ def _cc_union_find(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = CC_MAX_ITER,
-    small_graph_threshold: int = CC_SMALL_EDGES,
+    edges: DataFrame, small_graph_threshold: int = CC_SMALL_EDGES
 ) -> DataFrame:
     """(doc_id, cluster_rep) for every vertex of `edges` (a_id, b_id),
     where cluster_rep is the minimum doc_id of the vertex's connected
@@ -163,7 +163,7 @@ def connected_components(
         )
     )
     prev_sum: object = object()
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # localCheckpoint truncates lineage every iteration: the jump
         # self-join references the previous label table TWICE, so
         # without truncation the logical plan DOUBLES per iteration
@@ -179,7 +179,7 @@ def connected_components(
         prev_sum = cur_sum
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations"
+            f"connected_components did not converge in {CC_MAX_ITER} iterations"
         )
     return labels.select(
         F.col("v").alias("doc_id"), F.col("lbl").alias("cluster_rep")
@@ -198,17 +198,12 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles and the SimHash branch its distinct-token hashes from the
     same cached split — one documents scan + one tokenize, where the
     standalone queries each paid their own."""
-    from pyspark.sql import functions as F
-
-    from ..session import load_table, maybe_parallelize
-
-    docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
     # the capped pipelines' hot-bucket exact channels fingerprint raw
     # text through the `documents` view / load_table
-    docs.createOrReplaceTempView("documents")
-    toks = _persist(
-        docs.select("doc_id", F.split("text", " ").alias("toks")), eager=True
-    )
+    maybe_parallelize(
+        load_table(spark, sf_dir, "documents"), spark
+    ).createOrReplaceTempView("documents")
+    toks = _persist(_doc_tokens(spark, sf_dir), eager=True)
     toks.createOrReplaceTempView("dedup_toks_cached")
     mh = minhash_lsh_capped_from(spark, sf_dir, toks).select("a_id", "b_id")
     sp = simhash_pairs_capped_from(spark, "dedup_toks_cached").select(

@@ -54,6 +54,7 @@ from .dedup import (
     MINHASH_K,
     _band_signatures,
     _duck_minhash_sig,
+    _jaccard,
     _persist,
     shingles_of,
 )
@@ -132,13 +133,14 @@ def dedup_incremental_from(
         .distinct()
     )
     na, ob = new_sh.alias("na"), old_sh.alias("ob")
-    inter = F.size(F.array_intersect(F.col("na.sh"), F.col("ob.sh")))
-    union = F.size(F.col("na.sh")) + F.size(F.col("ob.sh")) - inter
-    jacc = inter.cast("double") / union
     verified = (
         cand.join(na, cand.doc_id == F.col("na.doc_id"))
         .join(ob, cand.old_id == F.col("ob.doc_id"))
-        .select(cand.doc_id.alias("doc_id"), "old_id", jacc.alias("jaccard"))
+        .select(
+            cand.doc_id.alias("doc_id"),
+            "old_id",
+            _jaccard("na", "ob").alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     best_w = Window.partitionBy("doc_id").orderBy(

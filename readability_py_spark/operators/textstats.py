@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table, maybe_parallelize, parallelize_hint
+from ..session import load_table, maybe_parallelize
 
 # BPE-ish tokenizer: letter runs, digit runs, single punctuation marks.
 BPE_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
@@ -646,7 +646,7 @@ WINNOW_K = 8  # char k-gram length
 WINNOW_W = 4  # winnowing window (in hashes)
 
 
-def _winnow_sql(dialect: str, hint: str = "") -> str:
+def _winnow_sql(dialect: str) -> str:
     """Generate the winnowing query for either dialect. All hashing is
     md5-prefix → BIGINT (the shared hash family), selection arithmetic
     is identical list algebra: rightmost-min position in window i is
@@ -684,20 +684,11 @@ def _winnow_sql(dialect: str, hint: str = "") -> str:
             f"transform(sequence(1, size(hs) - {w - 1}), i -> "
             f"array_min(slice(hs, i, {w})))"
         )
-        # `hint` is parallelize_hint(...)'s output: REPARTITION only on
-        # a split-starved scan, "" on a real multi-split input (where a
-        # hardcoded hint would coalesce the scan) — VERDICT r4 #1.
-        # The hint lives in an INNER subquery over the raw columns: a
-        # hint in the same block as the gram-hash build repartitions
-        # that block's OUTPUT, i.e. the expensive projection computes
-        # BELOW the exchange on the single-split scan — one core
-        # (measured: the whole 17-20 s winnow cost was this serial
-        # build; the selection stage above the exchange was parallel).
         body = (
             f"SELECT doc_id, "
             f"CASE WHEN length(n) >= {min_len} THEN {hashes} "
             f"ELSE CAST(array() AS ARRAY<BIGINT>) END AS hs "
-            f"FROM (SELECT {hint}doc_id, text FROM documents) "
+            "FROM documents "
             f"LATERAL VIEW explode(array("
             f"regexp_replace(lower(text), '[^a-z0-9]+', ''))) _nrm AS n"
         )
@@ -740,9 +731,10 @@ FROM (SELECT doc_id, list_sort(list_distinct({sel})) AS fps FROM hashed)
 
 
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    return spark.sql(_winnow_sql("spark", hint=parallelize_hint(spark, docs)))
+    maybe_parallelize(
+        load_table(spark, sf_dir, "documents"), spark
+    ).createOrReplaceTempView("documents")
+    return spark.sql(_winnow_sql("spark"))
 
 
 ORACLE_WINNOW_FINGERPRINT = _winnow_sql("duckdb")
@@ -782,12 +774,10 @@ def q_winnow_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes concurrently under AQE; see CLAUDE.md round-5 notes)."""
     from .dedup import _persist
 
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    fp = _persist(
-        spark.sql(_winnow_sql("spark", hint=parallelize_hint(spark, docs))),
-        eager=True,
-    )
+    maybe_parallelize(
+        load_table(spark, sf_dir, "documents"), spark
+    ).createOrReplaceTempView("documents")
+    fp = _persist(spark.sql(_winnow_sql("spark")), eager=True)
     posts = fp.select("doc_id", "n_fps", F.explode("fps").alias("f"))
     capped = _persist(
         posts.withColumn(
@@ -867,7 +857,7 @@ QC_DIM = 64  # hashed feature buckets
 QC_WEIGHTS = [((j * 2654435761) % 1001) - 500 for j in range(QC_DIM)]
 
 
-def _quality_classifier_sql(dialect: str, hint: str = "") -> str:
+def _quality_classifier_sql(dialect: str) -> str:
     d = QC_DIM
     if dialect == "spark":
         w_lit = "array(" + ", ".join(map(str, QC_WEIGHTS)) + ")"
@@ -895,7 +885,7 @@ def _quality_classifier_sql(dialect: str, hint: str = "") -> str:
         return rf"""
 WITH t AS (
   SELECT doc_id, split(trim(lower(text)), '\\s+') AS ws
-  FROM (SELECT {hint}doc_id, text FROM documents)
+  FROM documents
 )
 SELECT doc_id,
        CAST({uni} + {bi} AS BIGINT) AS score_milli,
@@ -932,11 +922,10 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dot product over md5-bucketed uni+bigram features —
     map-only; at 100 TB the plan is scan → project, the model vector
     rides the plan as a literal (or a broadcast for large dims)."""
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    return spark.sql(
-        _quality_classifier_sql("spark", hint=parallelize_hint(spark, docs))
-    )
+    maybe_parallelize(
+        load_table(spark, sf_dir, "documents"), spark
+    ).createOrReplaceTempView("documents")
+    return spark.sql(_quality_classifier_sql("spark"))
 
 
 ORACLE_QUALITY_CLASSIFIER = _quality_classifier_sql("duckdb")

@@ -215,12 +215,7 @@ def extraction_plan(
     return p.mapInPandas(fn, EXTRACT_SCHEMA)
 
 
-def run_extract_job(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    num_partitions: int | None = None,
-) -> dict:
+def run_extract_job(spark: SparkSession, pages: DataFrame, out_dir: str) -> dict:
     """Resumable run: anti-join the urls already committed to the
     ``extracted`` table, extract the rest, and append them as one
     snapshot (with lineage). The pass is that one write: the run's
@@ -237,9 +232,7 @@ def run_extract_job(
     resumed = catalog.exists("extracted")
     done = catalog.read(spark, "extracted") if resumed else None
     obs = Observation()
-    extracted = extraction_plan(
-        pages, done_urls=done, num_partitions=num_partitions
-    ).observe(
+    extracted = extraction_plan(pages, done_urls=done).observe(
         obs,
         F.count_if(~F.col("metrics.parse_ok")).alias("parse_errors"),
         F.size(F.collect_set("part_id")).alias("partitions"),
@@ -247,11 +240,7 @@ def run_extract_job(
     snap = catalog.append(
         extracted,
         "extracted",
-        lineage={
-            "job": "extract",
-            "resumed": resumed,
-            "num_partitions": num_partitions,
-        },
+        lineage={"job": "extract", "resumed": resumed},
     )
     counts = obs.get
     return {

@@ -107,14 +107,3 @@ def maybe_parallelize(df, spark: SparkSession):
         return df.repartition(n)
     return df
 
-
-def parallelize_hint(spark: SparkSession, df) -> str:
-    """SQL-hint twin of maybe_parallelize for generated-SQL operators
-    (SimHash, winnowing): returns a REPARTITION hint only when the
-    scan underneath is split-starved; "" on a real multi-split input
-    (where the old hardcoded /*+ REPARTITION(32) */ would COALESCE a
-    many-split scan)."""
-    n = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return f"/*+ REPARTITION({n}) */ "
-    return ""

@@ -42,6 +42,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class LocalTableCatalog:
@@ -83,7 +84,8 @@ class LocalTableCatalog:
         count node sits directly under the write, in the result stage,
         so a retried upstream stage cannot count a row twice. A
         compaction (``replaces`` given) adds no rows: its total_rows is
-        the rewrite's count."""
+        the rewrite's count. The record keeps df's schema, so reads
+        never start a job to infer it from the parquet footers."""
         snap_id = uuid.uuid4().hex[:16]
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("error").parquet(
@@ -101,7 +103,11 @@ class LocalTableCatalog:
             rec.update(added_rows=rows, total_rows=prev_total + rows)
         else:
             rec.update(kind="compaction", replaces=replaces, added_rows=0, total_rows=rows)
-        rec.update(data_dir=os.path.join("data", snap_id), lineage=lineage or {})
+        rec.update(
+            data_dir=os.path.join("data", snap_id),
+            schema=df.schema.json(),
+            lineage=lineage or {},
+        )
         with open(self._snap_log(name), "a") as fh:
             fh.write(json.dumps(rec) + "\n")
         return rec
@@ -112,13 +118,14 @@ class LocalTableCatalog:
         log). A committed compaction snapshot is a new baseline: it
         already contains every row of the snapshots it replaced, so
         reads union it with only the appends committed after it."""
-        dirs = [
-            self._snap_dir(name, s["snapshot_id"])
-            for s in self.live_snapshots(name)
-        ]
-        if not dirs:
+        live = self.live_snapshots(name)
+        if not live:
             raise FileNotFoundError(f"table {name} has no committed snapshots")
-        return spark.read.parquet(*dirs)
+        return _read_parquet(
+            spark,
+            live[-1],
+            [self._snap_dir(name, s["snapshot_id"]) for s in live],
+        )
 
     def live_snapshots(self, name: str) -> list[dict]:
         """The snapshots a read must union: everything from the latest
@@ -201,10 +208,12 @@ class LocalTableCatalog:
         self, spark: SparkSession, name: str, snap_id: str
     ) -> DataFrame:
         """Incremental read: exactly one committed snapshot's rows."""
-        committed = {s["snapshot_id"] for s in self.snapshots(name)}
+        committed = {s["snapshot_id"]: s for s in self.snapshots(name)}
         if snap_id not in committed:
             raise KeyError(f"snapshot {snap_id} not committed for {name}")
-        return spark.read.parquet(self._snap_dir(name, snap_id))
+        return _read_parquet(
+            spark, committed[snap_id], [self._snap_dir(name, snap_id)]
+        )
 
     def exists(self, name: str) -> bool:
         return bool(self.snapshots(name))
@@ -215,3 +224,9 @@ class LocalTableCatalog:
             return []
         with open(path) as fh:
             return [json.loads(line) for line in fh if line.strip()]
+
+
+def _read_parquet(spark: SparkSession, rec: dict, dirs: list[str]) -> DataFrame:
+    """Read snapshot dirs with the schema committed in ``rec``."""
+    schema = StructType.fromJson(json.loads(rec["schema"]))
+    return spark.read.schema(schema).parquet(*dirs)

@@ -24,19 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Cache registry (advisor round 3 — same leak class release_caches()
-# fixed in dedup): read_pages_jsonl must cache the raw scan (Spark
-# refuses corrupt-column-only queries over raw JSON otherwise), and a
-# long-lived session (bench/driver) ingesting repeatedly would
-# accumulate those cached relations without a release hook.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> None:
-    """Unpersist every relation cached by the ingest readers (call
-    after the pages/quarantine outputs are materialized; idempotent)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking=False)
+from ..operators.dedup import _persist
 
 # the on-disk JSONL shape: html is base64 text (JSON has no binary)
 PAGES_JSONL_SCHEMA = T.StructType(
@@ -58,21 +46,21 @@ def read_pages_jsonl(
 
     ``pages`` has the canonical schema (html decoded to binary);
     ``quarantine`` holds the raw text of every line that failed the
-    schema (bad JSON, wrong types) for audit/replay."""
-    raw = (
+    schema (bad JSON, wrong types) for audit/replay.
+
+    The parsed scan is cached, and freed by
+    ``operators.dedup.release_caches()`` like every other cached
+    relation: Spark disallows queries that reference ONLY the corrupt
+    column over a raw JSON scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so
+    the parsed relation must be materialized first. An ingest at
+    100 TB instead points `badRecordsPath` at a quarantine prefix and
+    skips the cache entirely (same audit property, zero memory)."""
+    raw = _persist(
         spark.read.schema(PAGES_JSONL_SCHEMA)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        # Spark disallows queries that reference ONLY the corrupt
-        # column over a raw JSON scan (QUERY_ONLY_CORRUPT_RECORD_
-        # COLUMN) — the parsed relation must be materialized first.
-        # cache() satisfies that here; an ingest at 100 TB instead
-        # points `badRecordsPath` at a quarantine prefix and skips
-        # the cache entirely (same audit property, zero memory).
-        .cache()
     )
-    _PERSISTED.append(raw)
     quarantine = raw.filter(F.col("_corrupt_record").isNotNull()).select(
         F.col("_corrupt_record").alias("raw_line")
     )

@@ -247,6 +247,49 @@ def test_extract_pass_is_one_write(spark, tmp_path):
     assert run == bare
 
 
+def test_resumed_pass_reads_committed_schema(spark, tmp_path):
+    """Catalog reads take the schema committed with the snapshot, so
+    they start no schema-inference job, and a resumed pass submits
+    exactly the jobs of a bare write of its plan over the committed
+    urls."""
+    from readability_py_spark.plans.bench_extract import build_pages_df
+    from readability_py_spark.plans.extract_job import (
+        extraction_plan,
+        run_extract_job,
+    )
+    from readability_py_spark.sources.catalog import LocalTableCatalog
+
+    out_dir = str(tmp_path / "job")
+    catalog = LocalTableCatalog(out_dir)
+    pages = build_pages_df(spark, 200).persist()
+    try:
+        pages.count()
+        run_extract_job(spark, pages.limit(100), out_dir)
+        snap_id = catalog.snapshots("extracted")[0]["snapshot_id"]
+        reads = _jobs_in_group(
+            spark, "catalog-reads",
+            lambda: (
+                catalog.read(spark, "extracted"),
+                catalog.read_snapshot(spark, "extracted", snap_id),
+            ),
+        )
+        done = catalog.read(spark, "extracted")
+        bare = _jobs_in_group(
+            spark, "bare-resumed-write",
+            lambda: extraction_plan(pages, done_urls=done).write.parquet(
+                str(tmp_path / "bare")
+            ),
+        )
+        run = _jobs_in_group(
+            spark, "resumed-pass",
+            lambda: run_extract_job(spark, pages, out_dir),
+        )
+    finally:
+        pages.unpersist()
+    assert reads == 0
+    assert run == bare
+
+
 def _footer_rows(catalog, table: str, snap_id: str) -> int:
     """Rows of one snapshot by its parquet footers."""
     import pyarrow.parquet as pq

@@ -60,15 +60,10 @@ def test_simhash_capped_no_quadratic_bucket(spark):
     docs (the invariant that bounds per-bucket join work at 100 TB)."""
     from readability_py_spark.operators.dedup import (
         LSH_BUCKET_CAP,
-        _simhash_sql,
+        q_simhash_docs,
     )
-    from readability_py_spark.session import load_table
 
-    load_table(spark, SF_ORACLE, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    sig = spark.sql(_simhash_sql("spark"))
-    sig.createOrReplaceTempView("sig_r3")
+    q_simhash_docs(spark, SF_ORACLE).createOrReplaceTempView("sig_r3")
     small_max = spark.sql(
         f"""
         WITH banded AS (SELECT doc_id, shiftright(simhash, 16) AS hi16 FROM sig_r3),

@@ -218,8 +218,9 @@ def test_minhash_fast_lsh_pipeline_equivalence(spark):
     equality holds as long as band recall covers the true pairs)."""
     from readability_py_spark.operators.dedup import (
         _band_signatures,
+        _doc_tokens,
         _persist,
-        _shingled,
+        _shingle_sets,
         minhash_lsh_dups_from,
         q_minhash_lsh_dups,
         release_caches,
@@ -230,10 +231,8 @@ def test_minhash_fast_lsh_pipeline_equivalence(spark):
         for r in q_minhash_lsh_dups(spark, SF_SMOKE).collect()
     }
     release_caches()
-    sh = _persist(_shingled(spark, SF_SMOKE).select("doc_id", "sh"))
-    fast_sig = _persist(
-        _band_signatures(_shingled(spark, SF_SMOKE), family="xxhash64")
-    )
+    sh = _persist(_shingle_sets(_doc_tokens(spark, SF_SMOKE)))
+    fast_sig = _persist(_band_signatures(sh, family="xxhash64"))
     fast_pairs = {
         (r["a_id"], r["b_id"], r["jaccard"])
         for r in minhash_lsh_dups_from(fast_sig, sh).collect()

@@ -14,27 +14,21 @@ from .conftest import SF_SMOKE, executed_plan
 
 
 # ---------------------------------------------------------------------------
-# maybe_parallelize / parallelize_hint gating
+# maybe_parallelize gating
 # ---------------------------------------------------------------------------
 
 
 def test_maybe_parallelize_gates_on_split_count(spark):
-    from readability_py_spark.session import (
-        load_table,
-        maybe_parallelize,
-        parallelize_hint,
-    )
+    from readability_py_spark.session import load_table, maybe_parallelize
 
     n = spark.sparkContext.defaultParallelism
     # single-split testdata scan → repartitioned to n
     docs = load_table(spark, SF_SMOKE, "documents")
     assert docs.rdd.getNumPartitions() < n
     assert maybe_parallelize(docs, spark).rdd.getNumPartitions() == n
-    assert parallelize_hint(spark, docs).startswith("/*+ REPARTITION(")
-    # pre-split input → passthrough, identical object, empty hint
+    # pre-split input → passthrough, identical object
     wide = spark.range(1000).repartition(2 * n)
     assert maybe_parallelize(wide, spark) is wide
-    assert parallelize_hint(spark, wide) == ""
 
 
 def test_repetition_stats_presplit_input_is_exchange_free(spark, tmp_path):
@@ -60,11 +54,13 @@ def test_repetition_stats_presplit_input_is_exchange_free(spark, tmp_path):
     assert a == b
 
 
-def test_simhash_presplit_input_has_no_repartition_hint(spark, tmp_path):
-    """The generated-SQL operators parameterize the old hardcoded
-    /*+ REPARTITION(32) */ (which would COALESCE a many-split scan)."""
-    from readability_py_spark.operators.dedup import _simhash_sql
-    from readability_py_spark.session import load_table, parallelize_hint
+def test_simhash_presplit_input_has_no_repartition(spark, tmp_path):
+    """The generated-SQL operators read a documents view built by
+    maybe_parallelize, so a multi-split scan passes through with no
+    exchange (the old hardcoded /*+ REPARTITION(32) */ would COALESCE
+    a many-split scan)."""
+    from readability_py_spark.operators.dedup import q_simhash_docs
+    from readability_py_spark.session import load_table
 
     sf = str(tmp_path)
     (
@@ -72,11 +68,7 @@ def test_simhash_presplit_input_has_no_repartition_hint(spark, tmp_path):
         .repartition(32)
         .write.parquet(f"{sf}/documents.parquet")
     )
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    hint = parallelize_hint(spark, docs)
-    assert hint == ""
-    docs.createOrReplaceTempView("documents")
-    df = spark.sql(_simhash_sql("spark", hint=hint))
+    df = q_simhash_docs(spark, sf)
     df.write.format("noop").mode("overwrite").save()
     assert "exchange" not in executed_plan(df).lower()
 

@@ -78,23 +78,25 @@ def test_crawl_manifest_csv(spark, tmp_path):
 
 
 def test_jsonl_cache_release_hook(spark, tmp_path):
-    """Every read_pages_jsonl cache is registered and release_caches()
-    drops them — a long-lived bench/driver session ingesting many
-    drops must not accumulate cached relations (advisor r3)."""
+    """The cached JSONL scan joins the one cache registry: after a drop
+    is read and both outputs are counted, operators.dedup's
+    release_caches() leaves the session's cache manager empty — a
+    long-lived bench/driver session ingesting many drops must not
+    accumulate cached relations (advisor r3)."""
+    from readability_py_spark.operators.dedup import release_caches
     from readability_py_spark.plans.bench_extract import build_pages_df
     from readability_py_spark.sources import pages_io
 
     out = str(tmp_path / "drop3")
     pages_io.write_pages_jsonl(build_pages_df(spark, 5), out)
-    before = len(pages_io._PERSISTED)
-    pages, _ = pages_io.read_pages_jsonl(spark, out)
+    spark.catalog.clearCache()  # start from an empty cache manager
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pages, quarantine = pages_io.read_pages_jsonl(spark, out)
     pages.count()
-    assert len(pages_io._PERSISTED) == before + 1
-    cached = pages_io._PERSISTED[-1]
-    assert cached.is_cached
-    pages_io.release_caches()
-    assert not pages_io._PERSISTED
-    assert not cached.is_cached
+    quarantine.count()
+    assert not cache.isEmpty()
+    release_caches()
+    assert cache.isEmpty()
 
 
 def _b64(s: bytes) -> str:
