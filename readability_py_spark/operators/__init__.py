@@ -103,7 +103,7 @@ LOCAL_ONLY = {
     # production-hash (xxhash64) capped LSH dedup: no DuckDB twin;
     # pair-set equality vs the driver-certified md5 capped pipeline is
     # pytest-pinned, and it is the query the dedup scaling pair
-    # measures (tools/dedup_scaling.py)
+    # measures (tools/scaling.py minhash_lsh_capped_fast)
     "minhash_lsh_capped_fast",
     # r6 additions past the 50-slot budget (both locally verified):
     # crawl-delta between two snapshots — oracle-paired (DuckDB FULL

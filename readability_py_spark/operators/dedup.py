@@ -698,21 +698,23 @@ SELECT a_id, b_id, hamming FROM exact
 
 
 def q_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the plain scan: the exact channel fingerprints only the hot rows'
-    # text, and a round-robin exchange under it would shuffle the whole
-    # table for them
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     _doc_tokens(spark, sf_dir).createOrReplaceTempView("doc_tokens")
-    return simhash_pairs_capped_from(spark, "doc_tokens")
+    return simhash_pairs_capped_from(spark, sf_dir, "doc_tokens")
 
 
-def simhash_pairs_capped_from(spark: SparkSession, toks_view: str) -> DataFrame:
+def simhash_pairs_capped_from(
+    spark: SparkSession, sf_dir: str, toks_view: str
+) -> DataFrame:
     """q_simhash_pairs_capped's pipeline over a registered (doc_id,
     toks) token view: the standalone query registers ``_doc_tokens``;
     groups.q_dedup_groups registers its persisted one, which the
-    MinHash branch reads too (VERDICT r5 item 5). The `documents` temp
-    view must also be registered (the hot-bucket exact channel
-    fingerprints raw text)."""
+    MinHash branch reads too (VERDICT r5 item 5).
+
+    The hot-bucket exact channel fingerprints raw text through the
+    `documents` view, registered here over the plain scan: it reads
+    only the hot rows, and a round-robin exchange under it would
+    shuffle the whole table for them."""
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     sig = _persist(spark.sql(_simhash_sql("spark", toks_view)), eager=True)
     sig.createOrReplaceTempView("simhash_sig_cached")
     return spark.sql(_simhash_pairs_capped_sql("spark"))

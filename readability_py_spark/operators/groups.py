@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, maybe_parallelize
 from .dedup import (
     JACCARD_THRESHOLD,
     ORACLE_MINHASH_LSH_CAPPED,
@@ -198,15 +197,10 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles and the SimHash branch its distinct-token hashes from the
     same cached split — one documents scan + one tokenize, where the
     standalone queries each paid their own."""
-    # the capped pipelines' hot-bucket exact channels fingerprint raw
-    # text through the `documents` view / load_table
-    maybe_parallelize(
-        load_table(spark, sf_dir, "documents"), spark
-    ).createOrReplaceTempView("documents")
     toks = _persist(_doc_tokens(spark, sf_dir), eager=True)
     toks.createOrReplaceTempView("dedup_toks_cached")
     mh = minhash_lsh_capped_from(spark, sf_dir, toks).select("a_id", "b_id")
-    sp = simhash_pairs_capped_from(spark, "dedup_toks_cached").select(
+    sp = simhash_pairs_capped_from(spark, sf_dir, "dedup_toks_cached").select(
         "a_id", "b_id"
     )
     return connected_components(mh.union(sp))
