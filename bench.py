@@ -122,7 +122,7 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     # ...and the Python workers, so the first mapInPandas query isn't
     # charged 32 interpreter spawns (a long-running cluster amortizes
-    # worker start to zero; same convention as tools/spark_job.py).
+    # worker start to zero; same convention as tools/scaling.py).
     import pandas as _pd
 
     def _noop(it):

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table, maybe_parallelize
+from ..session import jvm_memo, load_table, maybe_parallelize
 
 MINHASH_K = 12
 MINHASH_BAND_SIZE = 3  # 4 bands of 3
@@ -87,11 +87,8 @@ def release_caches() -> None:
         _PERSISTED.pop().unpersist(blocking=False)
 
 
-def shingles_from_tokens(toks) -> F.Column:
-    """Distinct bigram word-shingle set from an already-split token
-    array — so a shared persisted (doc_id, toks) relation can feed the
-    MinHash shingle build AND the SimHash token hash without a second
-    scan + split (VERDICT r5 item 5)."""
+def _shingles(toks: Column) -> Column:
+    """Distinct bigram word-shingle set of a token-array expression."""
     return F.array_distinct(
         F.when(
             F.size(toks) >= 2,
@@ -105,12 +102,22 @@ def shingles_from_tokens(toks) -> F.Column:
     )
 
 
-def shingles_of(text_col) -> F.Column:
-    """Distinct bigram word-shingle set of a text column — the shared
-    shingle definition for every MinHash family (and the composed
-    pipeline in operators/groups.py, which shingles url-dedup
+@jvm_memo
+def shingles_from_tokens(toks: str) -> Column:
+    """Distinct bigram word-shingle set of the already-split token
+    array column ``toks`` — so a shared persisted (doc_id, toks)
+    relation can feed the MinHash shingle build AND the SimHash token
+    hash without a second scan + split (VERDICT r5 item 5)."""
+    return _shingles(F.col(toks))
+
+
+@jvm_memo
+def shingles_of(text: str) -> Column:
+    """Distinct bigram word-shingle set of the text column ``text`` —
+    the shared shingle definition for every MinHash family (and the
+    composed pipeline in operators/groups.py, which shingles url-dedup
     survivors rather than the raw table)."""
-    return shingles_from_tokens(F.split(text_col, " "))
+    return _shingles(F.split(F.col(text), " "))
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,10 +139,11 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_sets(toks: DataFrame) -> DataFrame:
     """(doc_id, sh): the bigram shingle set of each token array."""
     return toks.select(
-        "doc_id", shingles_from_tokens(F.col("toks")).alias("sh")
+        "doc_id", shingles_from_tokens("toks").alias("sh")
     )
 
 
+@jvm_memo
 def _jaccard(a: str, b: str) -> Column:
     """Exact Jaccard of the ``sh`` sets of the relations aliased ``a``
     and ``b``, unrounded: each caller rounds and filters in the order
@@ -182,12 +190,41 @@ def _band_signatures(
     band_size: int = MINHASH_BAND_SIZE,
     family: str = "md5",
 ) -> DataFrame:
-    """(doc_id, band, band_sig) for k minhashes in bands of band_size —
-    map-only signature build (no explode of shingles, no shuffle).
-    ``family`` picks the permutation h_i(s) whose min over the shingles
-    is minhash i: ``"md5"`` is md5(i || ':' || s) as hex, the
-    oracle-parity default; ``"xxhash64"`` is xxhash64(i, s), the
-    production family.
+    """(doc_id, band, band_sig) for k minhashes of the ``sh`` shingle
+    sets in bands of band_size — map-only signature build (no explode
+    of shingles, no shuffle). ``family`` picks the permutation h_i(s)
+    whose min over the shingles is minhash i: ``"md5"`` is
+    md5(i || ':' || s) as hex, the oracle-parity default;
+    ``"xxhash64"`` is xxhash64(i, s), the production family.
+
+    Empty-shingle docs are dropped AFTER the generate, by their empty
+    band_sig (array_min over [] is null; concat_ws skips nulls), NOT
+    by a `filter(size(sh) > 0)` on the input: a source-column filter
+    is pushed below the parallelizing repartition into the single-
+    split test scan, and since its predicate inlines the shingle
+    expression, the WHOLE shingle build ran serially there (and then
+    again, in parallel, for the signatures) — measured as a full
+    serial corpus pass. A predicate on the generator's output cannot
+    cross the Generate, so it stays in the parallel stage; with a
+    real multi-split scan both forms fuse into the scan stage."""
+    if family not in ("md5", "xxhash64"):
+        raise ValueError(f"unknown MinHash family {family!r}")
+    mins, bands, cols, nonempty = _minhash_bands(k, band_size, family)
+    return (
+        d.select("doc_id", mins)
+        .select("doc_id", bands)
+        .select("doc_id", *cols)
+        .filter(nonempty)
+    )
+
+
+@jvm_memo
+def _minhash_bands(k: int, band_size: int, family: str):
+    """The Columns _band_signatures applies, in order: the k mins
+    ``m``, the exploded band structs ``bs``, their (band, band_sig)
+    fields, and the non-empty band_sig test. A k=64 fold is thousands
+    of expression nodes, each a py4j round trip to build, so it is
+    built once per JVM.
 
     r7: the k mins come from ONE aggregate pass over the shingle array
     (acc = k-vector of running mins, null-initialized; ``least`` skips
@@ -199,29 +236,34 @@ def _band_signatures(
     9.7 → 8.6 s on the k=64 md5 build at sf1.0; output set-identical
     by construction and by the A/B in OPTIMIZATION_r07.md). An
     empty/1-token doc folds to an all-null vector → concat_ws skips
-    nulls → band_sig '' → dropped by the existing filter, matching
-    array_min's null on empty input."""
-    if family not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown MinHash family {family!r}")
-    fast = family == "xxhash64"
+    nulls → band_sig '' → dropped by the caller's filter, matching
+    array_min's null on empty input.
 
-    def hashes_of(s: Column) -> Column:
-        if fast:
+    The md5 family encodes each shingle to UTF-8 once, before the
+    fold, and hashes the bytes of the ASCII prefix "i:" followed by
+    them: the same bytes as md5(encode(concat('i:', s))), without k
+    encodes per shingle."""
+    fast = family == "xxhash64"
+    if fast:
+        sh = F.col("sh")
+
+        def hashes_of(s: Column) -> Column:
             return F.array(*[F.xxhash64(F.lit(i), s) for i in range(k)])
-        return F.array(
-            *[
-                F.md5(F.encode(F.concat(F.lit(f"{i}:"), s), "utf-8"))
-                for i in range(k)
-            ]
-        )
+
+    else:
+        sh = F.transform(F.col("sh"), lambda s: F.encode(s, "utf-8"))
+
+        def hashes_of(s: Column) -> Column:
+            return F.array(
+                *[F.md5(F.concat(F.lit(f"{i}:".encode()), s)) for i in range(k)]
+            )
 
     init = F.array_repeat(F.lit(None).cast("bigint" if fast else "string"), k)
     mins = F.aggregate(
-        F.col("sh"),
+        sh,
         init,
         lambda acc, s: F.zip_with(acc, hashes_of(s), lambda a, b: F.least(a, b)),
     )
-    n_bands = k // band_size
     bands = F.array(
         *[
             F.struct(
@@ -234,28 +276,14 @@ def _band_signatures(
                     ],
                 ).alias("band_sig"),
             )
-            for b in range(n_bands)
+            for b in range(k // band_size)
         ]
     )
-    # Empty-shingle docs are dropped AFTER the generate, by their empty
-    # band_sig (array_min over [] is null; concat_ws skips nulls), NOT
-    # by a `filter(size(sh) > 0)` on the input: a source-column filter
-    # is pushed below the parallelizing repartition into the single-
-    # split test scan, and since its predicate inlines the shingle
-    # expression, the WHOLE shingle build ran serially there (and then
-    # again, in parallel, for the signatures) — measured as a full
-    # serial corpus pass. A predicate on the generator's output cannot
-    # cross the Generate, so it stays in the parallel stage; with a
-    # real multi-split scan both forms fuse into the scan stage.
     return (
-        d.select("doc_id", mins.alias("m"))
-        .select("doc_id", F.explode(bands).alias("bs"))
-        .select(
-            "doc_id",
-            F.col("bs.band").alias("band"),
-            F.col("bs.band_sig").alias("band_sig"),
-        )
-        .filter(F.col("band_sig") != "")
+        mins.alias("m"),
+        F.explode(bands).alias("bs"),
+        (F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")),
+        F.col("band_sig") != "",
     )
 
 
@@ -425,7 +453,7 @@ def q_minhash_lsh_capped_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         _doc_tokens(spark, sf_dir).select(
             "doc_id",
             F.transform(
-                shingles_from_tokens(F.col("toks")), lambda s: F.xxhash64(s)
+                shingles_from_tokens("toks"), lambda s: F.xxhash64(s)
             ).alias("sh"),
         ),
         eager=True,

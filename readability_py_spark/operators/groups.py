@@ -267,7 +267,7 @@ def q_pipeline_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sh = _persist(
-        surv.select("doc_id", shingles_of(F.col("text")).alias("sh")), eager=True
+        surv.select("doc_id", shingles_of("text").alias("sh")), eager=True
     )
     sig = _persist(_band_signatures(sh), eager=True)
     pairs = minhash_lsh_dups_from(sig, sh).select("a_id", "b_id")

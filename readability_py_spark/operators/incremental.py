@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table, maybe_parallelize
+from ..session import jvm_memo, load_table, maybe_parallelize
 from .dedup import (
     JACCARD_THRESHOLD,
     MINHASH_BAND_SIZE,
@@ -74,15 +74,49 @@ def build_corpus_index(
     and shingle sets. The shingle relation is eager-persisted — it
     feeds both the signature build here and, conceptually, later
     verify probes; fps/sigs are map-only over it."""
-    fps = docs.select(
-        "doc_id", F.md5(F.encode(F.col("text"), "utf-8")).alias("fp")
-    )
-    sh = _persist(
-        docs.select("doc_id", shingles_of(F.col("text")).alias("sh")),
-        eager=True,
-    )
+    c = _incremental_cols()
+    fps = docs.select("doc_id", c["fp"])
+    sh = _persist(docs.select("doc_id", c["sh"]), eager=True)
     sigs = _band_signatures(sh, k=MINHASH_K, band_size=MINHASH_BAND_SIZE)
     return fps, sigs, sh
+
+
+@jvm_memo
+def _incremental_cols() -> dict:
+    """The wide Columns of the incremental job that do not depend on
+    its inputs — fingerprint, shingles, probe join, Jaccard, best-match
+    rank, verdict projection — built once per JVM."""
+    best_w = Window.partitionBy("doc_id").orderBy(
+        F.col("jaccard").desc(), F.col("old_id").asc()
+    )
+    return {
+        "fp": F.md5(F.encode(F.col("text"), "utf-8")).alias("fp"),
+        "sh": shingles_of("text").alias("sh"),
+        "probe_on": (F.col("n.band") == F.col("o.band"))
+        & (F.col("n.band_sig") == F.col("o.band_sig")),
+        "cand": (
+            F.col("n.doc_id").alias("doc_id"),
+            F.col("o.doc_id").alias("old_id"),
+        ),
+        "jaccard": _jaccard("na", "ob").alias("jaccard"),
+        "rn": F.row_number().over(best_w),
+        "verdict": (
+            "doc_id",
+            F.when(F.col("e.match_id").isNotNull(), F.lit("exact_dup"))
+            .when(F.col("nr.old_id").isNotNull(), F.lit("near_dup"))
+            .otherwise(F.lit("unique"))
+            .alias("verdict"),
+            F.coalesce("e.match_id", "nr.old_id", F.lit(-1).cast("long")).alias(
+                "match_id"
+            ),
+            F.when(F.col("e.match_id").isNotNull(), F.lit(1.0))
+            .when(
+                F.col("nr.old_id").isNotNull(), F.round(F.col("nr.jaccard"), 4)
+            )
+            .otherwise(F.lit(0.0))
+            .alias("jaccard"),
+        ),
+    }
 
 
 def dedup_incremental_from(
@@ -94,9 +128,8 @@ def dedup_incremental_from(
     """The incremental job proper: (doc_id, text) of the NEW snapshot
     against the stored index relations. Old text never enters; the old
     side is consumed by three keyed equi-joins only."""
-    new_fp = new_docs.select(
-        "doc_id", F.md5(F.encode(F.col("text"), "utf-8")).alias("fp")
-    )
+    c = _incremental_cols()
+    new_fp = new_docs.select("doc_id", c["fp"])
     # r7: eager-persist the exact channel — it feeds BOTH the near-dup
     # probe's anti-join AND the final verdict join (the multi-reference
     # rule), and un-persisted it re-ran the full fingerprint join
@@ -114,40 +147,23 @@ def dedup_incremental_from(
     probe = new_docs.join(exact.select("doc_id"), "doc_id", "left_anti")
     # new-side shingles feed the signature build AND the verify join:
     # eager persist per the multi-reference rule
-    new_sh = _persist(
-        probe.select("doc_id", shingles_of(F.col("text")).alias("sh")),
-        eager=True,
-    )
+    new_sh = _persist(probe.select("doc_id", c["sh"]), eager=True)
     new_sigs = _band_signatures(new_sh, k=MINHASH_K, band_size=MINHASH_BAND_SIZE)
     cand = (
         new_sigs.alias("n")
-        .join(
-            old_sigs.alias("o"),
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.band_sig") == F.col("o.band_sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_id"),
-            F.col("o.doc_id").alias("old_id"),
-        )
+        .join(old_sigs.alias("o"), c["probe_on"])
+        .select(*c["cand"])
         .distinct()
     )
     na, ob = new_sh.alias("na"), old_sh.alias("ob")
     verified = (
         cand.join(na, cand.doc_id == F.col("na.doc_id"))
         .join(ob, cand.old_id == F.col("ob.doc_id"))
-        .select(
-            cand.doc_id.alias("doc_id"),
-            "old_id",
-            _jaccard("na", "ob").alias("jaccard"),
-        )
+        .select(cand.doc_id.alias("doc_id"), "old_id", c["jaccard"])
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
-    best_w = Window.partitionBy("doc_id").orderBy(
-        F.col("jaccard").desc(), F.col("old_id").asc()
-    )
     near = (
-        verified.withColumn("rn", F.row_number().over(best_w))
+        verified.withColumn("rn", c["rn"])
         .filter(F.col("rn") == 1)
         .select("doc_id", "old_id", "jaccard")
     )
@@ -156,22 +172,7 @@ def dedup_incremental_from(
         new_docs.select("doc_id")
         .join(e, "doc_id", "left")
         .join(nr, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("e.match_id").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("nr.old_id").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("unique"))
-            .alias("verdict"),
-            F.coalesce("e.match_id", "nr.old_id", F.lit(-1).cast("long")).alias(
-                "match_id"
-            ),
-            F.when(F.col("e.match_id").isNotNull(), F.lit(1.0))
-            .when(
-                F.col("nr.old_id").isNotNull(), F.round(F.col("nr.jaccard"), 4)
-            )
-            .otherwise(F.lit(0.0))
-            .alias("jaccard"),
-        )
+        .select(*c["verdict"])
     )
 
 

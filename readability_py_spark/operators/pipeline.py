@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, maybe_parallelize
+from ..session import jvm_memo, load_table, maybe_parallelize
 from .textstats import (
     REP_DUP5_MAX,
     REP_TOP2_MAX,
@@ -88,6 +88,14 @@ def gated_docs(
     (no repartition, no exchange) the Generate sits directly on the
     scan and fuses into the scan stage exactly like the Filter would."""
     docs = maybe_parallelize(load_table(spark, sf_dir, "documents"), spark)
+    return docs.select(_gate(with_text))
+
+
+@jvm_memo
+def _gate(with_text: bool) -> Column:
+    """gated_docs' Generate over a documents row: the normalized url,
+    every gate and the surviving row's fields — several thousand
+    expression nodes, so built once per JVM."""
     norm = normalize_url(_messy_pair_url())
     flags = gopher_flag_cols(F.col("text"), TEST_CORPUS_STOPWORDS)
     top2, dup5 = repetition_cols(F.col("text"))
@@ -103,7 +111,7 @@ def gated_docs(
         schema += ",text:string"
     unit = F.struct(*fields)
     empty = F.array().cast(f"array<struct<{schema}>>")
-    return docs.select(F.inline(F.when(keep, F.array(unit)).otherwise(empty)))
+    return F.inline(F.when(keep, F.array(unit)).otherwise(empty))
 
 
 def q_pipeline_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,7 @@ Scale rationale (100 TB / 1000-executor target, tested on local[32]):
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark import SparkConf, SparkContext
@@ -59,6 +60,10 @@ def build_session(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # A dedup-family pass generates ~205 distinct classes; the stock
+        # 100-entry cache evicted each before its next use, so every
+        # pass re-ran Janino on all of them and the JIT on the results.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             ARROW_MAX_RECORDS_PER_BATCH,
@@ -81,9 +86,49 @@ def _launcher_master() -> str | None:
     return SparkConf().get("spark.master", None)
 
 
+# jvm_memo's Columns by (builder, args), and the gateway they were built over
+_MEMO: dict = {}
+_memo_gateway = None
+
+
+def jvm_memo(builder):
+    """Memoize a pure Column builder per JVM: the first call with some
+    positional arguments builds its expression tree over py4j (one
+    round trip per node), later calls return the same Column. A Column
+    is an unresolved expression, so one object serves every DataFrame
+    and session of the JVM that made it; a new py4j gateway (a new JVM)
+    empties the memo."""
+
+    @functools.wraps(builder)
+    def built(*args):
+        global _memo_gateway
+        if _memo_gateway is not SparkContext._gateway:
+            _MEMO.clear()
+            _memo_gateway = SparkContext._gateway
+        key = (builder, args)
+        if key not in _MEMO:
+            _MEMO[key] = builder(*args)
+        return _MEMO[key]
+
+    return built
+
+
+# inferred table schemas by (absolute path, mtime_ns, size)
+_SCHEMAS: dict = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-testdata parquet table."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Read one driver-testdata parquet table. Inferring a parquet
+    schema is a Spark job, so it runs once per file version (path,
+    mtime, size) and later reads pass the schema it found."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    if key not in _SCHEMAS:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def maybe_parallelize(df, spark: SparkSession):

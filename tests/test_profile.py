@@ -35,10 +35,12 @@ def test_profile_entry_fields(spark):
         "shuffle_read_mb", "shuffle_write_mb", "spill_mb",
     }
     layers = entry["layers"]
-    parts = ("driver_s", "catalyst_s", "job_overhead_s", "stages_s")
+    parts = ("build_s", "driver_s", "catalyst_s", "job_overhead_s", "stages_s")
     assert all(layers[p] >= 0 for p in parts)
     assert layers["job_count"] == entry["jobs"] >= 1
     assert 0 < entry["builder_s"] < entry["wall_s"]
+    # build_s is the builder call less its jobs and their Catalyst
+    assert 0 < layers["build_s"] <= entry["builder_s"]
     rec = entry["reconcile"]
     assert rec["wall_s"] == entry["wall_s"]
     assert abs(rec["parts_s"] - sum(layers[p] for p in parts)) < 1e-3
@@ -48,7 +50,7 @@ def test_profile_entry_fields(spark):
 
 def _entry(wall: float, **layers) -> dict:
     base = {
-        "driver_s": 0.2, "catalyst_s": 0.03, "job_overhead_s": 0.01,
+        "build_s": 0.1, "driver_s": 0.2, "catalyst_s": 0.03, "job_overhead_s": 0.01,
         "stages_s": 0.3, "task_s": 0.4, "gc_s": 0.0, "python_s": 0.0,
         "exchange_mb": 0.2, "spill_mb": 0.0, "job_count": 3, "stage_count": 3,
     }
@@ -78,6 +80,14 @@ def test_diff_names_the_layer_that_moved():
     assert lines[1].startswith("replanned:") and "catalyst_s" in lines[1]
     assert lines[2].startswith("steady:")
     assert lines[3:] == ["only in A: old_only", "only in B: new_only"]
+
+
+def test_diff_names_build_s():
+    """Building fewer expressions over py4j moves build_s, and --diff
+    names it."""
+    a = {"targets": {"q": _entry(1.2, build_s=0.6)}}
+    b = {"targets": {"q": _entry(0.7, build_s=0.1)}}
+    assert "moved most: build_s 0.6 -> 0.1" in _profile_module().diff(a, b)[0]
 
 
 def test_tools_directory_keeps_the_stdlib_profile_module():

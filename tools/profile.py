@@ -18,9 +18,12 @@ builder time, the write's Catalyst phases, the job count, per-stage
 metrics, the top SQL nodes by time, the host's steal, and ``layers``:
 the wall split into ``catalyst_s`` (analysis + optimization + planning
 of every SQL execution of the rep), ``stages_s`` (the union of the
-stage intervals), ``job_overhead_s`` (inside a job, no stage running)
-and ``driver_s`` (no job running, less Catalyst), plus task totals and
-volumes. ``reconcile`` sets the four parts against the wall; the
+stage intervals), ``job_overhead_s`` (inside a job, no stage running),
+``build_s`` (inside the builder call, no job running, less the
+Catalyst of the builder's own executions: building Columns and
+DataFrames over py4j) and ``driver_s`` (the rest with no job running,
+less Catalyst), plus task totals and volumes. ``reconcile`` sets the
+five parts against the wall; the
 residual is Catalyst time that ran while a job did. ``extraction``
 also carries perfbench's per-document phase split over the corpus'
 first 1,000 pages.
@@ -143,16 +146,25 @@ def _r(x: float) -> float:
     return round(x, 4)
 
 
-def entry_of_rep(wall: float, builder: float, executions, g: dict, steal: float) -> dict:
-    """One target's profile entry from a rep's timings, its Catalyst
-    phases (builder executions first, the write last) and its Spark
-    job group."""
+def entry_of_rep(span: tuple, executions, g: dict, steal: float) -> dict:
+    """One target's profile entry from a rep's (start, built, end)
+    times, its Catalyst phases (builder executions first, the write
+    last) and its Spark job group."""
+    t0, t1, t2 = span
+    wall, builder = t2 - t0, t1 - t0
     stages = g["stages"]
-    in_jobs = sm.stage_busy_s(_job_spans(g["jobs"]))
+    jobs = _job_spans(g["jobs"])
+    in_jobs = sm.stage_busy_s(jobs)
+    in_build_jobs = sm.stage_busy_s(
+        [{"t0": max(j["t0"], t0), "t1": min(j["t1"], t1)} for j in jobs if j["t0"] < t1]
+    )
     stage_busy = sm.stage_busy_s(stages)
     catalyst = sum(sum(p.values()) for _, p in executions)
+    build_catalyst = sum(sum(p.values()) for _, p in executions[:-1])
+    build = max(0.0, builder - in_build_jobs - build_catalyst)
     parts = {
-        "driver_s": max(0.0, wall - in_jobs - catalyst),
+        "build_s": build,
+        "driver_s": max(0.0, wall - in_jobs - catalyst - build),
         "catalyst_s": catalyst,
         "job_overhead_s": in_jobs - stage_busy,
         "stages_s": stage_busy,
@@ -214,8 +226,8 @@ def _profile_target(spark, rest, listener, name: str, build) -> dict:
         steal = hoststat.steal_pct(ticks, hoststat.cpu_ticks())
         executions = listener.take_through_write()
         release_caches()
-        if best is None or t2 - t0 < best[0]:
-            best = (t2 - t0, t1 - t0, executions, rest.group(group), steal)
+        if best is None or t2 - t0 < best[0][2] - best[0][0]:
+            best = ((t0, t1, t2), executions, rest.group(group), steal)
     return entry_of_rep(*best)
 
 
